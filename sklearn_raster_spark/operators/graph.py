@@ -158,10 +158,13 @@ def connected_components(
         # (their edges became self-loops), hence the left join.
         lmap = lvl.select(F.col("node").alias("_ln"), F.col("lbl").alias("_ll"))
         # LAZY (r13): labels has exactly one consumer per level (the
-        # next level's fold, or the final action) — the chain of
-        # marked checkpoints materializes inside whichever job reads
-        # it first, still truncating lineage level by level, without
-        # one dedicated |V| materialization job per level.
+        # next level's fold, or the final action), and no action
+        # inside this loop reads it. So the checkpoints do NOT truncate
+        # level by level: the whole chain, one join per level, is
+        # planned into the first job that reads the final labels, and
+        # every marked checkpoint materializes together inside that
+        # job. That saves one dedicated |V| materialization job per
+        # level; lineage grows with the level count (<= max_iter).
         labels = (
             labels.join(lmap, labels.lbl == lmap._ln, "left")
             .select("node", F.coalesce("_ll", "lbl").alias("lbl"))

@@ -108,21 +108,19 @@ def q58_json_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Distributed raster-stack ingest (reference S1/S2, "
         "datasets/_base.py:71-104): 8 per-band .npy grids cut from the "
-        "embeddings table are decoded BY EXECUTORS via a file-list "
-        "DataFrame -> mapInPandas numpy reader, then aggregated per "
+        "embeddings table are decoded BY EXECUTORS, one row-block "
+        "tile of every band per task, then aggregated per "
         "band (count / min / max / corner cell via min_by on (y,x)). "
         "The oracle recomputes every statistic from the embeddings "
         "view with zero float arithmetic, so a hash match proves "
         "byte-exact file round-trip AND correct (y,x) cell layout.",
 )
 def q68_raster_stack_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
     from sklearn_raster_spark.sources.raster import (
         materialize_raster_stack,
         read_raster_stack,
     )
 
-    ensure_workers_can_import(spark)
     files = materialize_raster_stack(spark, sf_dir)
     long_df = read_raster_stack(spark, files)
     return long_df.groupBy(F.col("band").cast("bigint").alias("band")).agg(

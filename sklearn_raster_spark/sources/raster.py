@@ -1,21 +1,39 @@
-"""Distributed raster-stack ingestion: per-band grid files -> one
-long-form DataFrame, read BY THE EXECUTORS.
+"""Distributed raster-stack ingestion: per-band grid files -> a long
+(band, y, x, value) or wide (y, x, "0".."n-1") DataFrame, decoded BY
+THE EXECUTORS one tile at a time.
 
 Reference S1/S2 load a stack of per-band GeoTIFFs into one Dataset
-(datasets/_base.py:71-104). The Spark dual keeps the same shape while
-distributing the file IO itself:
+(datasets/_base.py:71-104) and score dense (samples, features) blocks,
+one per spatial chunk with every band present. The Spark dual reads
+the same way:
 
-    file-list DataFrame (band, path)          -- tiny, driver-built
-      -> repartition(n_files)                 -- one file per task
-      -> mapInPandas(numpy reader)            -- executor-side decode
-      -> long form (band, y, x, value)        -- the engine's native
-                                                 FeatureFrame layout
+    spark.range(T, numPartitions=T)      -- one row per tile, driver-built
+      -> mapInPandas(tile decode)        -- task t reads rows [y0, y1)
+                                            of EVERY band file
+      -> long  (band, y, x, value)       -- read_raster_stack
+      -> wide  (y, x, "0".."n-1")        -- raster_stack_to_wide, no shuffle
+
+Tile rule: T = max(1, ceil(band-file bytes / spark.sql.files.maxPartitionBytes)),
+Spark's own scan split size, so there is no raster-specific knob. Tile
+t covers rows [t*H//T, (t+1)*H//T) of the tallest grid (height H).
+``.npy`` bands are memory-mapped, so a task pages in only its own
+rows; other containers decode whole and are sliced (T is 1 for any
+stack below the split size). The driver stats the files and decodes
+nothing.
+
+Pivot shortcut: read_raster_stack records its file list on the
+DataFrame it returns. raster_stack_to_wide, given that untransformed
+output, reads the same files wide (pivoting an unpivot is the
+identity): one job, no Exchange. Any other long frame (filtered,
+projected, joined) is pivoted; that pivot is the reference the wide
+reader is tested against. Either way the wide cells are the union of
+every file's grid (grids anchor at (0, 0); a band id outside
+0..n-1 adds cells but no column), and a missing band, a cell outside
+a smaller grid or a NaN cell is NULL, while +-Inf pass through.
 
 The container has no rasterio/GDAL, so the band container is ``.npy``
-(numpy's own grid format) — the DISTRIBUTION pattern (a scan operator
-whose work unit is "decode one file", scaling to any number of files
-across any number of executors) is the real subject and is identical
-for GeoTIFF: swap ``np.load`` for ``rasterio.open().read()``.
+(numpy's own grid format); GeoTIFF bands decode through the builtin
+codec (sources/tiff.py) or rasterio when present.
 
 Fixture bands are cut deterministically from the embeddings table
 (band b = dimension b of the vec_id-ordered embedding matrix, reshaped
@@ -155,49 +173,138 @@ def read_band_tags(path: str) -> dict | None:
     }
 
 
-def read_raster_stack(spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
-    """Long-form scan of a band-file stack. Each task decodes whole
-    files (the file list is repartitioned so tasks get disjoint files);
-    decode output is Arrow-batched back as (band, y, x, value) rows.
-    With F files and E executors the scan scales as ceil(F/E) decode
-    waves — the same contract as Spark's own binaryFile source."""
-    flist = spark.createDataFrame(
-        [(int(b), p) for b, p in files], ["band", "path"]
-    ).repartition(len(files), "band")
+def _open_band(path: str) -> np.ndarray:
+    """One band file as a 2-D grid whose row slices a tile reads:
+    ``.npy`` is memory-mapped, so a task pages in only its own rows;
+    every other container decodes whole through _decode_grid."""
+    if path.endswith(".npy"):
+        grid = np.load(path, mmap_mode="r")
+    else:
+        grid = _decode_grid(path)
+    if grid.ndim != 2:
+        raise ValueError(f"{path}: band grid must be 2-D, got shape {grid.shape}")
+    return grid
+
+
+def _nullable(vals: np.ndarray) -> pd.arrays.FloatingArray:
+    """NaN cells surface as SQL NULL, EXPLICITLY, via the masked
+    nullable-float array: NaN is the raster world's canonical float
+    nodata (a MISSING cell, reference features.py NoData semantics),
+    and relying on Arrow's implicit pandas nan_as_null default would
+    leave the contract to a library setting. +-Inf are real (if
+    degenerate) cell VALUES and pass through."""
+    return pd.arrays.FloatingArray(vals, np.isnan(vals))
+
+
+def _decode_tiles(files, n_tiles: int, tiles) -> Iterator[tuple]:
+    """The one decode body. Yields ``(y0, y1, [(band, rows)])`` for each
+    tile id in ``tiles``: rows [y0, y1) of every band file as float64
+    arrays (fewer rows, or none, where a band's grid is shorter). Tile t
+    covers rows [t*H//n_tiles, (t+1)*H//n_tiles) of the tallest grid
+    (height H)."""
+    grids = [(band, _open_band(path)) for band, path in files]
+    height = max((g.shape[0] for _, g in grids), default=0)
+    for t in map(int, tiles):
+        y0, y1 = t * height // n_tiles, (t + 1) * height // n_tiles
+        if y1 > y0:
+            yield y0, y1, [(band, np.array(g[y0:y1], dtype=np.float64)) for band, g in grids]
+
+
+def _tile_scan(spark: SparkSession, files, emit, schema: StructType) -> DataFrame:
+    """``spark.range(T, numPartitions=T).mapInPandas``: task t decodes
+    tile t of every band and hands its rows to ``emit``. T is the
+    stack's bytes over ``spark.sql.files.maxPartitionBytes``, Spark's
+    own scan split size; the driver stats the files and decodes
+    nothing."""
+    from sklearn_raster_spark.session import ensure_workers_can_import
+
+    ensure_workers_can_import(spark)  # the UDF pickles this module by reference
+    files = [(int(b), str(p)) for b, p in files]
+    bands = [b for b, _ in files]
+    dups = sorted({b for b in bands if bands.count(b) > 1})
+    if dups:
+        raise ValueError(f"raster stack has more than one file for band(s) {dups}")
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n_tiles = max(1, -(-sum(os.path.getsize(p) for _, p in files) // split))
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for band, path in zip(pdf["band"], pdf["path"]):
-                grid = _decode_grid(path)
-                ys, xs = np.indices(grid.shape)
-                vals = grid.ravel().astype(np.float64)
-                yield pd.DataFrame(
-                    {
-                        "band": np.full(grid.size, band, dtype=np.int32),
-                        "y": ys.ravel().astype(np.int32),
-                        "x": xs.ravel().astype(np.int32),
-                        # NaN cells surface as SQL NULL — EXPLICITLY,
-                        # via the masked nullable-float array: NaN is
-                        # the raster world's canonical float nodata (a
-                        # MISSING cell, reference features.py NoData
-                        # semantics), and relying on Arrow's implicit
-                        # pandas nan_as_null default would leave the
-                        # contract to a library setting. +-Inf are
-                        # real (if degenerate) cell VALUES and pass
-                        # through. (round-9 non-finite fuzz axis)
-                        "value": pd.arrays.FloatingArray(
-                            vals, np.isnan(vals)
-                        ),
-                    }
-                )
+            for y0, y1, blocks in _decode_tiles(files, n_tiles, pdf["id"]):
+                yield from emit(y0, y1, blocks)
 
-    return flist.mapInPandas(decode, RASTER_SCHEMA)
+    return spark.range(n_tiles, numPartitions=n_tiles).mapInPandas(decode, schema)
+
+
+def _emit_long(y0: int, y1: int, blocks) -> Iterator[pd.DataFrame]:
+    for band, rows in blocks:
+        h, w = rows.shape
+        if rows.size:
+            yield pd.DataFrame(
+                {
+                    "band": np.full(rows.size, band, dtype=np.int32),
+                    "y": np.repeat(np.arange(y0, y0 + h, dtype=np.int32), w),
+                    "x": np.tile(np.arange(w, dtype=np.int32), h),
+                    "value": _nullable(rows.ravel()),
+                }
+            )
+
+
+def read_raster_stack(spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
+    """Long-form scan (band, y, x, value) of a band-file stack: one row
+    per cell of each band's own grid. Band ids must be distinct. The
+    returned DataFrame carries its file list, so raster_stack_to_wide
+    can read it wide without a pivot."""
+    files = list(files)
+    df = _tile_scan(spark, files, _emit_long, RASTER_SCHEMA)
+    df._raster_files = files
+    return df
+
+
+def _read_raster_wide(
+    spark: SparkSession, files: list[tuple[int, str]], n_bands: int
+) -> DataFrame:
+    """Wide-form scan (y, x, "0".."n_bands-1") straight from the files,
+    equal to the pivot of read_raster_stack's rows."""
+
+    def emit(y0: int, y1: int, blocks) -> Iterator[pd.DataFrame]:
+        # the union of the grids: row y spans the widest grid reaching it
+        row_w = np.zeros(y1 - y0, dtype=np.int64)
+        for _, rows in blocks:
+            h = rows.shape[0]
+            row_w[:h] = np.maximum(row_w[:h], rows.shape[1])
+        width = int(row_w.max())
+        cells = (np.arange(width) < row_w[:, None]).ravel()
+        out = {
+            "y": np.repeat(np.arange(y0, y1, dtype=np.int32), width)[cells],
+            "x": np.tile(np.arange(width, dtype=np.int32), y1 - y0)[cells],
+        }
+        by_band = dict(blocks)
+        for b in range(n_bands):
+            rows = by_band.get(b)
+            if rows is None or rows.shape != (y1 - y0, width):
+                grid = np.full((y1 - y0, width), np.nan)
+                if rows is not None and rows.size:
+                    grid[: rows.shape[0], : rows.shape[1]] = rows
+                rows = grid
+            out[str(b)] = _nullable(rows.ravel()[cells])
+        yield pd.DataFrame(out)
+
+    schema = StructType(
+        [StructField("y", IntegerType()), StructField("x", IntegerType())]
+        + [StructField(str(b), DoubleType()) for b in range(n_bands)]
+    )
+    return _tile_scan(spark, files, emit, schema)
 
 
 def raster_stack_to_wide(long_df: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
     """The S2 merge: long (band, y, x, value) -> one column per band,
-    keyed by (y, x). Explicit pivot values keep the plan static (no
-    driver-side distinct scan)."""
+    keyed by (y, x). read_raster_stack's own untransformed output is
+    read wide straight from its files (pivoting an unpivot is the
+    identity); any other long frame is pivoted, with explicit pivot
+    values so the plan stays static (no driver-side distinct scan)."""
+    files = vars(long_df).get("_raster_files")
+    if files is not None:
+        return _read_raster_wide(long_df.sparkSession, files, n_bands)
     return (
         long_df.groupBy("y", "x")
         .pivot("band", list(range(n_bands)))

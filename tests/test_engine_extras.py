@@ -311,3 +311,136 @@ def test_geotiff_compressed_band_through_raster_source(spark, tmp_path):
     )
     assert np.array_equal(got0.reshape(5, 6), grid0)
     assert np.array_equal(got1.reshape(5, 6), grid1)
+
+
+def _npy_band(tmp_path, name, grid):
+    path = str(tmp_path / name)
+    np.save(path, np.asarray(grid, dtype=np.float64))
+    return path
+
+
+def _stack_ragged(tmp_path):
+    rng = np.random.default_rng(3)
+    shapes = [(4, 5), (6, 3), (2, 7)]
+    return [(b, _npy_band(tmp_path, f"r{b}.npy", rng.normal(size=s))) for b, s in enumerate(shapes)], 3
+
+
+def _stack_nonfinite(tmp_path):
+    g0 = np.array([[1.0, np.nan, np.inf], [-np.inf, 0.0, np.nan]])
+    g1 = np.array([[np.nan, np.nan, 2.0], [3.0, -np.inf, 4.0]])
+    return [(0, _npy_band(tmp_path, "n0.npy", g0)), (1, _npy_band(tmp_path, "n1.npy", g1))], 2
+
+
+def _stack_missing_bands(tmp_path):
+    # n_bands above the file count: bands 1 and 3 have no file
+    return [
+        (0, _npy_band(tmp_path, "m0.npy", np.arange(12.0).reshape(3, 4))),
+        (2, _npy_band(tmp_path, "m2.npy", -np.arange(6.0).reshape(2, 3))),
+    ], 4
+
+
+def _stack_band_beyond_n(tmp_path):
+    # band 5 >= n_bands: its larger grid adds cells but no column
+    return [
+        (0, _npy_band(tmp_path, "o0.npy", np.ones((2, 3)))),
+        (1, _npy_band(tmp_path, "o1.npy", np.full((3, 2), 2.0))),
+        (5, _npy_band(tmp_path, "o5.npy", np.full((5, 6), 9.0))),
+    ], 2
+
+
+def _stack_tif(tmp_path):
+    from sklearn_raster_spark.sources.tiff import write_gtiff
+
+    rng = np.random.default_rng(5)
+    files = []
+    for b, shape in enumerate([(5, 4), (3, 6)]):
+        path = str(tmp_path / f"t{b}.tif")
+        write_gtiff(path, rng.normal(size=shape).astype(np.float32))
+        files.append((b, path))
+    return files, 2
+
+
+@pytest.mark.parametrize("tiles", ["one", "many"])
+@pytest.mark.parametrize(
+    "stack",
+    [_stack_ragged, _stack_nonfinite, _stack_missing_bands, _stack_band_beyond_n, _stack_tif],
+    ids=["ragged", "nonfinite", "missing_bands", "band_beyond_n", "tif"],
+)
+def test_raster_wide_read_equals_pivot(spark, tmp_path, stack, tiles):
+    """The direct wide read of read_raster_stack's output equals the
+    long->wide pivot (reached through a .select("*") copy) cell for cell
+    and field for field, in one tile and in many tiny ones."""
+    from sklearn_raster_spark.sources.raster import (
+        _decode_grid,
+        raster_stack_to_wide,
+        read_raster_stack,
+    )
+
+    files, n_bands = stack(tmp_path)
+    split = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(split)
+    try:
+        if tiles == "many":
+            spark.conf.set(split, "256")
+        long_df = read_raster_stack(spark, files)
+        fast = raster_stack_to_wide(long_df, n_bands)
+        ref = raster_stack_to_wide(long_df.select("*"), n_bands)
+        assert (fast.rdd.getNumPartitions() > 1) == (tiles == "many")
+        assert fast.schema == ref.schema
+        got = sorted(fast.collect(), key=lambda r: (r.y, r.x))
+        want = sorted(ref.collect(), key=lambda r: (r.y, r.x))
+    finally:
+        spark.conf.set(split, saved)
+    assert len(got) == len(want) > 0
+    assert got == want
+    # the long form holds each band's own grid cells only
+    assert long_df.count() == sum(_decode_grid(p).size for _, p in files)
+
+
+def test_raster_wide_read_is_one_job_without_exchange(spark, tmp_path):
+    """read -> wide is a single shuffle-free scan: one job, no Exchange."""
+    import uuid
+
+    from sklearn_raster_spark.sources.raster import raster_stack_to_wide, read_raster_stack
+
+    files = [(b, _npy_band(tmp_path, f"j{b}.npy", np.full((8, 6), float(b)))) for b in range(3)]
+    wide = raster_stack_to_wide(read_raster_stack(spark, files), 3)
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    sc = spark.sparkContext
+    group = f"raster-wide-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "raster wide read")
+    try:
+        rows = wide.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 48
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_raster_readers_ship_the_package(spark, tmp_path, monkeypatch):
+    """Both readers ship the package to the workers themselves, so a
+    driver importing it from outside the repo needs no extra call."""
+    import sklearn_raster_spark.session as session
+    from sklearn_raster_spark.sources.raster import raster_stack_to_wide, read_raster_stack
+
+    calls = []
+    real = session.ensure_workers_can_import
+    monkeypatch.setattr(
+        session, "ensure_workers_can_import", lambda s: (calls.append(s), real(s))
+    )
+    long_df = read_raster_stack(spark, [(0, _npy_band(tmp_path, "s0.npy", np.ones((2, 2))))])
+    assert calls == [spark]
+    raster_stack_to_wide(long_df, 1)
+    assert calls == [spark, spark]
+
+
+@pytest.mark.parametrize("bands", [[0, 0], [0, 1, 1]], ids=["pair", "among_three"])
+def test_raster_stack_rejects_duplicate_band_ids(spark, tmp_path, bands):
+    """Two files for one band would double its long-form cells and make
+    the pivot's first() pick a file per cell at random: refused."""
+    from sklearn_raster_spark.sources.raster import read_raster_stack
+
+    files = [(b, _npy_band(tmp_path, f"d{i}.npy", np.ones((2, 2)))) for i, b in enumerate(bands)]
+    with pytest.raises(ValueError, match="more than one file"):
+        read_raster_stack(spark, files)
