@@ -56,10 +56,6 @@ def q50_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _distinct_tokens(col="text"):
-    return F.array_distinct(F.split(F.col(col), " "))
-
-
 def ppjoin_prefix_index(toks: DataFrame, threshold: float, carry: tuple = ()) -> DataFrame:
     """PPJoin prefix index, shared by q51 (self-join) and q122
     (asymmetric batch x corpus — operators/corpus.py).
@@ -279,28 +275,42 @@ def minhash_pairs(
             F.xxhash64(*[f"w{j}" for j in range(shingle)]).alias("sh"),
         )
     )
+    return (
+        _banded_jaccard(sh_rows, lambda sh, i: F.xxhash64(sh, F.lit(i)), n_tables)
+        .select("doc_a", "doc_b", F.round(1.0 - F.col("jac"), 6).alias("jaccard_dist"))
+        .filter(F.col("jaccard_dist") < threshold)
+    )
+
+
+def _banded_jaccard(sh_rows: DataFrame, salted_hash, n_tables: int) -> DataFrame:
+    """q52/q150's LSH core over shingle rows (doc_id, sh): table i's
+    signature is min(salted_hash(sh, i)) over a doc's shingles; docs
+    colliding in any table become distinct (doc_a < doc_b) candidates,
+    each verified once with the exact shingle-set Jaccard ``jac``.
+    Returns (doc_a, doc_b, jac); the twins differ only in the hash
+    family and in how they filter and round ``jac``."""
     # signature table: one grouped pass gives every per-table minhash
-    # AND the distinct shingle set for the exact verify. EAGERLY
-    # materialized: feeds the band explode and both verify sides (the
-    # round-2 persist-before-self-join finding) — at cluster scale
-    # "checkpoint the signature table before self-joining it".
+    # (min over duplicate shingles == min over distinct ones) AND the
+    # distinct shingle set for the exact verify. EAGERLY materialized:
+    # feeds the band explode and both verify sides (the round-2
+    # persist-before-self-join finding) — at cluster scale "checkpoint
+    # the signature table before self-joining it".
     toks = shared_lineage(
         sh_rows.groupBy("doc_id")
         .agg(
             *[
-                F.min(F.xxhash64("sh", F.lit(i))).alias(f"h{i}")
+                F.min(salted_hash(F.col("sh"), i)).alias(f"h{i}")
                 for i in range(n_tables)
             ],
-            F.collect_set("sh").alias("shingles"),
+            F.collect_set("sh").alias("ss"),
         )
         .select(
             "doc_id",
             *[f"h{i}" for i in range(n_tables)],
-            "shingles",
-            F.size("shingles").alias("nsh"),
+            "ss",
+            F.size("ss").alias("nss"),
         )
     )
-
     bands = toks.select(
         "doc_id",
         F.posexplode(
@@ -318,23 +328,20 @@ def minhash_pairs(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    ta = toks.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sh_a"),
-        F.col("nsh").alias("n_a"),
-    )
-    tb = toks.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sh_b"),
-        F.col("nsh").alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+
+    def side(s: str) -> DataFrame:
+        return toks.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("ss").alias(f"ss_{s}"),
+            F.col("nss").alias(f"n_{s}"),
+        )
+
+    inter = F.size(F.array_intersect("ss_a", "ss_b"))
     jac = inter.cast("double") / (F.col("n_a") + F.col("n_b") - inter)
     return (
-        candidates.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select("doc_a", "doc_b", F.round(1.0 - jac, 6).alias("jaccard_dist"))
-        .filter(F.col("jaccard_dist") < threshold)
+        candidates.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select("doc_a", "doc_b", jac.alias("jac"))
     )
 
 
@@ -427,57 +434,15 @@ def q150_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = with_ws.select(
         "doc_id",
-        F.explode(F.array_distinct(word_shingle_array(k))).alias("shingle"),
+        F.explode(F.array_distinct(word_shingle_array(k))).alias("sh"),
     )
-    # r12 OPT (guide §2.3/§2.4, the q52 shape): ONE grouped pass over
-    # the shingle rows computes every per-table signature (min over
-    # the identical md5-60bit expressions — min per (doc, tbl) of the
-    # exploded struct form equals min of each salted hash directly)
-    # AND the verify shingle set, replacing the 3x struct explode +
-    # second groupBy(doc_id, tbl) shuffle; the persisted table is the
-    # 1-row-per-doc signature table, not the exploded shingle rows.
-    # Oracle hash unchanged (same hash family, same sets — verified at
-    # sf0.001/0.01/0.1 this round).
-    toks = shared_lineage(
-        sh.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    _md5_int60(F.concat_ws("#", F.col("shingle"), F.lit(str(i))))
-                ).alias(f"h{i}")
-                for i in range(MINHASH_PORT_TABLES)
-            ],
-            F.collect_set("shingle").alias("ss"),
-        )
-    )
-    sigs = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"h{i}") for i in range(MINHASH_PORT_TABLES)])
-        ).alias("tbl", "h"),
-    )
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"), F.col("tbl").alias("tbl_a"), F.col("h").alias("h_a")
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"), F.col("tbl").alias("tbl_b"), F.col("h").alias("h_b")
-    )
-    cand = (
-        a.join(
-            b,
-            (F.col("tbl_a") == F.col("tbl_b"))
-            & (F.col("h_a") == F.col("h_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sa = toks.select(F.col("doc_id").alias("doc_a"), F.col("ss").alias("ss_a"))
-    sb = toks.select(F.col("doc_id").alias("doc_b"), F.col("ss").alias("ss_b"))
-    inter = F.size(F.array_intersect("ss_a", "ss_b"))
-    jac = inter.cast("double") / (F.size("ss_a") + F.size("ss_b") - inter)
+    jac = F.col("jac")
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _banded_jaccard(
+            sh,
+            lambda sh, i: _md5_int60(F.concat_ws("#", sh, F.lit(str(i)))),
+            MINHASH_PORT_TABLES,
+        )
         # filter on the UNROUNDED value (matches the oracle's WHERE,
         # which also precedes its ROUND) — filtering post-round would
         # flip boundary pairs
@@ -522,35 +487,45 @@ def simhash_col(hashes_col: str = "tok_hashes", bits: int = 64) -> F.Column:
         "with hamming distance <= 6 via bit_count(xor). Rows-only.",
 )
 def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _simhash_pairs(
+        spark, sf_dir, lambda w: F.xxhash64(w), bits=64, band_bits=16, max_hamming=6
+    )
+
+
+def _simhash_pairs(
+    spark: SparkSession, sf_dir: str, tok_hash, bits: int, band_bits: int, max_hamming: int
+) -> DataFrame:
+    """q53/q151's banded SimHash near-dup pairs (doc_a, doc_b, hamming):
+    ``tok_hash`` maps a word column to its bigint hash, whose low
+    ``bits`` bits vote into the fingerprint; bits // band_bits bands of
+    ``band_bits`` bits generate candidates, and pairs within
+    ``max_hamming`` (bit_count of xor) are kept."""
     from sklearn_raster_spark.utils.fold_kernels import simhash_pack_kernel
 
-    # NULL-text docs have no tokens and therefore no fingerprint; an
+    # NULL-text docs have no tokens and therefore no fingerprint (the
+    # q151 oracle's UNNEST(STRING_SPLIT(NULL)) casts no votes); an
     # unfiltered split(NULL) folds to a constant fp that bands every
-    # NULL doc with every other (random-instance fuzz finding on q151,
-    # the same lineage)
+    # NULL doc with every other (random-instance fuzz finding on q151)
     docs = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     fps = (
         docs.select("doc_id", F.split("text", " ").alias("words"))
-        .select(
-            "doc_id",
-            F.transform("words", lambda w: F.xxhash64(w)).alias("tok_hashes"),
-        )
-        # r12 OPT (guide §4.2): the 64 F.aggregate vote folds ran
-        # INTERPRETED (~64 x |tokens| lambda calls per doc — measured
-        # 1.3 s of this query's 4.0 s); the Arrow kernel computes the
-        # identical integer votes in one vectorized pass (0.34 s,
-        # bit-equal on the full corpus — tests/test_fold_kernels.py).
-        # simhash_col remains the expression-form reference.
-        .select("doc_id", simhash_pack_kernel(64)("tok_hashes").alias("fp"))
+        .select("doc_id", F.transform("words", tok_hash).alias("tok_hashes"))
+        # r12 OPT (guide §4.2): the per-bit F.aggregate vote folds ran
+        # INTERPRETED (~bits x |tokens| lambda calls per doc — measured
+        # 1.3 s of q53's 4.0 s); the Arrow kernel computes the identical
+        # integer votes in one vectorized pass (0.34 s, bit-equal on the
+        # full corpus — tests/test_fold_kernels.py). simhash_col remains
+        # the expression-form reference.
+        .select("doc_id", simhash_pack_kernel(bits)("tok_hashes").alias("fp"))
     )
     # both sides of the banded self-join read this lineage; without a
-    # persist the 64-term fingerprint fold runs TWICE per doc. Eager:
-    # a lazy persist is not populated in time for the second scan when
-    # both sides materialize inside the self-join's one job.
+    # persist the fingerprint fold runs TWICE per doc. Eager: a lazy
+    # persist is not populated in time for the second scan when both
+    # sides materialize inside the self-join's one job.
     fps = shared_lineage(fps)
-    # band keys: 4 x 16-bit slices; near-dups (hamming<=6) must agree on
-    # at least one band by pigeonhole when hamming <= 3 per 4 bands...
-    # we use <=6 with 4 bands as a recall-oriented candidate filter.
+    # the band join is a recall-oriented candidate filter: pigeonhole
+    # guarantees a shared band only for hamming < bits // band_bits, so
+    # pairs up to max_hamming apart can be missed
     banded = fps.select(
         "doc_id",
         "fp",
@@ -559,15 +534,17 @@ def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 *[
                     F.struct(
                         F.lit(i).alias("band"),
-                        F.shiftright("fp", 16 * i).bitwiseAND(F.lit(0xFFFF)).alias("key"),
+                        F.shiftright("fp", band_bits * i)
+                        .bitwiseAND(F.lit((1 << band_bits) - 1))
+                        .alias("key"),
                     )
-                    for i in range(4)
+                    for i in range(bits // band_bits)
                 ]
             )
         ).alias("bk"),
     ).select("doc_id", "fp", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -577,14 +554,15 @@ def q53_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp"))).alias("hamming"),
+            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
+            .cast("int")
+            .alias("hamming"),
         )
         # hamming filter BEFORE the dedup shuffle: far-apart pairs that
         # happen to collide on one band never enter the distinct
-        .filter(F.col("hamming") <= 6)
+        .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return pairs
 
 
 SIMHASH_PORT_BITS = 60  # md5-int60 hash width (q150's portable family)
@@ -645,68 +623,13 @@ SIMHASH_PORT_HAMMING = 6
         "exists only to make the oracle exact.",
 )
 def q151_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NULL-text docs: no tokens -> no fingerprint -> no bands, matching
-    # the oracle where UNNEST(STRING_SPLIT(NULL)) contributes no votes
-    # and the doc never reaches the fp CTE (random-instance fuzz: the
-    # unfiltered fold gave every NULL doc the SAME fp and banded all of
-    # them together)
-    from sklearn_raster_spark.utils.fold_kernels import simhash_pack_kernel
-
-    docs = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    n_bands = SIMHASH_PORT_BITS // SIMHASH_PORT_BAND_BITS
-    band_mask = (1 << SIMHASH_PORT_BAND_BITS) - 1
-    fps = (
-        docs.select("doc_id", F.split("text", " ").alias("words"))
-        .select(
-            "doc_id",
-            F.transform("words", _md5_int60).alias("tok_hashes"),
-        )
-        # r12 OPT: vectorized vote packing (see q53); votes are
-        # integers, so the kernel is bit-identical to the 60-fold
-        # expression form and the oracle grade is unaffected
-        # (hash-verified at sf0.001/0.01/0.1 this round).
-        .select(
-            "doc_id",
-            simhash_pack_kernel(SIMHASH_PORT_BITS)("tok_hashes").alias("fp"),
-        )
-    )
-    fps = shared_lineage(fps)  # both sides of the banded self-join
-    banded = fps.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("fp", SIMHASH_PORT_BAND_BITS * i)
-                        .bitwiseAND(F.lit(band_mask))
-                        .alias("key"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        "doc_id", "fp", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH_PORT_HAMMING)
-        .distinct()
+    return _simhash_pairs(
+        spark,
+        sf_dir,
+        _md5_int60,
+        bits=SIMHASH_PORT_BITS,
+        band_bits=SIMHASH_PORT_BAND_BITS,
+        max_hamming=SIMHASH_PORT_HAMMING,
     )
 
 

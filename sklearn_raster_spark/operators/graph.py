@@ -434,6 +434,24 @@ PAGERANK_DAMPING = 0.85
         "iteration monotonicity).",
 )
 def q120_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranks = _pagerank(
+        spark,
+        sf_dir,
+        init=lambda n: F.lit(1.0 / n),
+        contrib=F.col("r") / F.col("deg"),
+        update=lambda n: F.lit((1.0 - PAGERANK_DAMPING) / n)
+        + F.lit(PAGERANK_DAMPING) * F.sum("c"),
+    )
+    return ranks.select("node", F.round("r", 10).alias("rank"))
+
+
+def _pagerank(spark: SparkSession, sf_dir: str, init, contrib, update) -> DataFrame:
+    """q120/q159's power iteration over the symmetric co-purchase
+    graph, returning (node, r) after PAGERANK_ITERS steps. The twins
+    differ only in arithmetic: ``init(n_nodes)`` is the starting rank,
+    ``contrib`` one edge's share of its source rank ``r`` over the
+    source degree ``deg``, and ``update(n_nodes)`` the aggregate over
+    the contributions ``c`` that gives a target's next rank."""
     # r12 OPT: checkpoint directed pairs, symmetrize lazily (see
     # connected_components — halves the checkpoint, runs the pair
     # lineage's post-exchange tail once instead of once per branch)
@@ -447,34 +465,29 @@ def q120_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form ran the same |V| aggregate twice back-to-back
     deg = deg.localCheckpoint(eager=False)  # feeds n_nodes count AND the edge join
     n_nodes = deg.count()
-    ranks = deg.select("node", F.lit(1.0 / n_nodes).alias("rank"))
+    ranks = deg.select("node", init(n_nodes).alias("r"))
     edges_deg = (
         edges.join(deg, edges.pa == deg.node)
         .select("pa", "pb", "deg")
         .localCheckpoint(eager=True)
     )
-    teleport = (1.0 - PAGERANK_DAMPING) / n_nodes
     # r12 OPT (guide §2.4/§5): the loop runs a FIXED iteration count with
     # no data-dependent decisions, so per-iteration localCheckpoints were
     # pure overhead — each groupBy already materializes a shuffle
     # boundary (the natural recovery point), and one lazy 8-level plan
-    # executes in a single job. The per-iteration nodes left join is
-    # also gone: the graph is symmetric and edge-defined, so every node
-    # has an in-edge and the contribution aggregate covers all |V| nodes
-    # (the q159 invariant; coalesce never fired). Measured 4.6 -> 2.9 s
-    # at sf0.1 with max |rank delta| = 0.0 vs the checkpointed form.
+    # executes in a single job. No per-iteration nodes left join either:
+    # the graph is symmetric and edge-defined, so every node has an
+    # in-edge and the contribution aggregate covers all |V| nodes (the
+    # q159 oracle relies on the same invariant). Measured 4.6 -> 2.9 s
+    # (q120) and 4.9 -> 3.5 s (q159) at sf0.1, results unchanged.
     for _ in range(PAGERANK_ITERS):
         ranks = (
             edges_deg.join(ranks, edges_deg.pa == ranks.node)
-            .select(F.col("pb").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+            .select(F.col("pb").alias("node"), contrib.alias("c"))
             .groupBy("node")
-            .agg(
-                (
-                    F.lit(teleport) + F.lit(PAGERANK_DAMPING) * F.sum("c")
-                ).alias("rank")
-            )
+            .agg(update(n_nodes).alias("r"))
         )
-    return ranks.select("node", F.round("rank", 10).alias("rank"))
+    return ranks
 
 
 # --- portable PageRank (q159): the iterative family, hash-graded ------
@@ -559,43 +572,12 @@ def _pagerank_portable_oracle() -> str:
         "localCheckpoint lineage cuts.",
 )
 def q159_pagerank_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12 OPT: checkpoint directed pairs, symmetrize lazily (see
-    # connected_components — halves the checkpoint, runs the pair
-    # lineage's post-exchange tail once instead of once per branch)
-    pairs = _copurchase_pairs(spark, sf_dir).localCheckpoint(eager=True)
-    edges = pairs.unionByName(
-        pairs.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"))
+    ranks = _pagerank(
+        spark,
+        sf_dir,
+        init=lambda n: F.lit(PAGERANK_SCALE // n).cast("long"),
+        contrib=F.expr("r div deg"),
+        update=lambda n: F.expr("(85 * sum(c)) div 100")
+        + F.lit((15 * PAGERANK_SCALE // 100) // n),
     )
-    deg = edges.groupBy(F.col("pa").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
-    # LAZY checkpoint (r13, guide §5): the count() right below is the
-    # materializing action (computes every partition), so the eager
-    # form ran the same |V| aggregate twice back-to-back
-    deg = deg.localCheckpoint(eager=False)  # feeds n_nodes count AND the edge join
-    n_nodes = deg.count()
-    init = PAGERANK_SCALE // n_nodes
-    tele = (15 * PAGERANK_SCALE // 100) // n_nodes
-    ranks = deg.select("node", F.lit(init).cast("long").alias("r"))
-    edges_deg = (
-        edges.join(deg, edges.pa == deg.node)
-        .select("pa", "pb", "deg")
-        .localCheckpoint(eager=True)
-    )
-    # r12 OPT (guide §2.4/§5): fixed iteration count, no data-dependent
-    # control flow — the per-iteration localCheckpoints were pure
-    # overhead (each groupBy is already a materialized shuffle
-    # boundary), so the 8 iterations now build ONE lazy plan executed
-    # by the final action. Integer arithmetic is order-independent, so
-    # the result is bit-identical (probe: set-equality vs the
-    # checkpointed form; oracle hash unchanged). Measured 4.9 -> 3.5 s
-    # at sf0.1.
-    for _ in range(PAGERANK_ITERS):
-        # symmetric graph: every node has >= 1 in-edge, so the inner
-        # join + groupBy covers all |V| nodes (the oracle relies on the
-        # same invariant)
-        ranks = (
-            edges_deg.join(ranks, edges_deg.pa == ranks.node)
-            .select(F.col("pb").alias("node"), F.expr("r div deg").alias("c"))
-            .groupBy("node")
-            .agg((F.expr("(85 * sum(c)) div 100") + F.lit(tele)).alias("r"))
-        )
     return ranks.select(F.col("node").alias("partkey"), F.col("r").alias("rank_e12"))

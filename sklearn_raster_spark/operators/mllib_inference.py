@@ -237,29 +237,7 @@ def q118_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "each sweep a join per block, no driver-side matrix.",
 )
 def q119_als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.ml.recommendation import ALS
-
-    li = read_table(spark, sf_dir, "lineitem")
-    orders = read_table(spark, sf_dir, "orders")
-    ratings = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("o_custkey").cast("int").alias("user"),
-            F.col("l_partkey").cast("int").alias("item"),
-        )
-        .agg(F.count(F.lit(1)).cast("float").alias("rating"))
-    )
-    als = ALS(
-        rank=8,
-        maxIter=5,
-        seed=42,
-        implicitPrefs=True,
-        userCol="user",
-        itemCol="item",
-        ratingCol="rating",
-        coldStartStrategy="drop",
-    )
-    model = als.fit(ratings)
+    model = _als_model(spark, sf_dir)
     recs = model.recommendForAllUsers(3)
     return recs.select(
         F.col("user").alias("custkey"),

@@ -413,6 +413,7 @@ def materialize_media_files(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import tempfile
 
+    from sklearn_raster_spark.session import ensure_workers_can_import
     from sklearn_raster_spark.sources import table_path
     from sklearn_raster_spark.utils.cache import (
         cache_is_current,
@@ -420,6 +421,10 @@ def materialize_media_files(spark: SparkSession, sf_dir: str) -> str:
         write_cache_marker,
     )
 
+    # the asset writer here and every query's decode kernel import this
+    # package on EXECUTORS — ship it via addPyFile so a bare driver
+    # session (different cwd, no PYTHONPATH export) still resolves it
+    ensure_workers_can_import(spark)
     master = spark.sparkContext.master
     base = os.environ.get("SPARK_GRAFT_MEDIA_DIR")
     if base is None:
@@ -514,6 +519,52 @@ def materialize_media_files(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
+def _scan_assets(reader, path: str, sub: str, ext: str, content: str = "content") -> DataFrame:
+    """(doc_id, ``content``) rows from a binaryFile ``reader`` over
+    ``path/sub/*.ext``; doc_id is parsed from the asset's file name."""
+    return (
+        reader.option("pathGlobFilter", f"*.{ext}")
+        .load(f"{path}/{sub}")
+        .select(
+            F.regexp_extract(F.col("path"), rf"(\d+)\.{ext}$", 1)
+            .cast("long")
+            .alias("doc_id"),
+            F.col("content").alias(content),
+        )
+    )
+
+
+_IMAGE_STATS = ("img_h", "img_w", "px_sum", "px_max")
+
+
+def _image_stats(img: np.ndarray) -> tuple[int, int, int, int]:
+    """``_IMAGE_STATS`` of a decoded greyscale image; px_max is the
+    largest nonzero pixel, 0 for an all-zero image."""
+    px = img.reshape(-1).astype(np.int64)
+    nz = px[px > 0]
+    return int(img.shape[0]), int(img.shape[1]), int(px.sum()), int(nz.max()) if nz.size else 0
+
+
+def _image_stats_frame(bf: DataFrame, palette: bool) -> DataFrame:
+    """q161/q164's strict decode of (doc_id, content) assets into
+    doc_id + ``_IMAGE_STATS``; ``palette`` keeps channel 0 of a GIF's
+    identity-palette RGB."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from sklearn_raster_spark.operators.multimodal import _image_stats, decode_image
+
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
+                img = decode_image(bytes(payload))
+                rows.append((int(doc_id), *_image_stats(img[..., 0] if palette else img)))
+            yield pd.DataFrame(rows, columns=["doc_id", *_IMAGE_STATS])
+
+    return bf.mapInPandas(
+        kernel, "doc_id long, img_h int, img_w int, px_sum bigint, px_max int"
+    )
+
+
 @query(
     "q161_image_decode_features",
     media_error_mode="strict",
@@ -547,47 +598,9 @@ def materialize_media_files(spark: SparkSession, sf_dir: str) -> str:
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
 def q161_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    # the decode kernel and the asset writer import this package on
-    # EXECUTORS — ship it via addPyFile so a bare driver session
-    # (different cwd, no PYTHONPATH export) still resolves it, the
-    # q68 pattern (tests/driver_parity_worker.py EXECUTE set)
-    ensure_workers_can_import(spark)
     path = materialize_media_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(path + "/img")
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_image
-
-        for pdf in batches:
-            out = {"doc_id": [], "img_h": [], "img_w": [], "px_sum": [], "px_max": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(payload))
-                px = img.reshape(-1).astype(np.int64)
-                nz = px[px > 0]
-                out["doc_id"].append(int(doc_id))
-                out["img_h"].append(int(img.shape[0]))
-                out["img_w"].append(int(img.shape[1]))
-                out["px_sum"].append(int(px.sum()))
-                out["px_max"].append(int(nz.max()) if nz.size else 0)
-            yield pd.DataFrame(out)
-
-    return (
-        bf.select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.png$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "content",
-        )
-        .mapInPandas(
-            kernel, "doc_id long, img_h int, img_w int, px_sum bigint, px_max int"
-        )
-    )
+    bf = _scan_assets(spark.read.format("binaryFile"), path, "img", "png")
+    return _image_stats_frame(bf, palette=False)
 
 
 @query(
@@ -620,15 +633,8 @@ def q161_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
 def q162_audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)  # see q161
     path = materialize_media_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.wav")
-        .load(path + "/wav")
-    )
+    bf = _scan_assets(spark.read.format("binaryFile"), path, "wav", "wav")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from sklearn_raster_spark.operators.multimodal import decode_audio
@@ -646,17 +652,8 @@ def q162_audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out["peak"].append(int(s.max()) if s.size else 0)
             yield pd.DataFrame(out)
 
-    return (
-        bf.select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.wav$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "content",
-        )
-        .mapInPandas(
-            kernel,
-            "doc_id long, sample_rate int, n_samples int, energy bigint, peak int",
-        )
+    return bf.mapInPandas(
+        kernel, "doc_id long, sample_rate int, n_samples int, energy bigint, peak int"
     )
 
 
@@ -695,26 +692,14 @@ JPEG_MAX_ERR = 3  # |decoded - source| bound at quality 100 (DCT rounding)
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
 def q163_jpeg_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)  # see q161
     path = materialize_media_files(spark, sf_dir)
-
-    def scan(sub: str, ext: str, alias: str) -> DataFrame:
-        return (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", f"*.{ext}")
-            .load(f"{path}/{sub}")
-            .select(
-                F.regexp_extract(F.col("path"), rf"(\d+)\.{ext}$", 1)
-                .cast("long")
-                .alias("doc_id"),
-                F.col("content").alias(alias),
-            )
-        )
-
-    paired = scan("jpg", "jpg", "jpg_bytes").join(
-        F.broadcast(scan("img", "png", "png_bytes")), "doc_id"
+    paired = _scan_assets(
+        spark.read.format("binaryFile"), path, "jpg", "jpg", "jpg_bytes"
+    ).join(
+        F.broadcast(
+            _scan_assets(spark.read.format("binaryFile"), path, "img", "png", "png_bytes")
+        ),
+        "doc_id",
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -773,43 +758,9 @@ def q163_jpeg_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
 def q164_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)  # see q161
     path = materialize_media_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
-        .load(path + "/gif")
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_image
-
-        for pdf in batches:
-            out = {"doc_id": [], "img_h": [], "img_w": [], "px_sum": [], "px_max": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(payload))[..., 0]  # identity palette
-                px = img.reshape(-1).astype(np.int64)
-                nz = px[px > 0]
-                out["doc_id"].append(int(doc_id))
-                out["img_h"].append(int(img.shape[0]))
-                out["img_w"].append(int(img.shape[1]))
-                out["px_sum"].append(int(px.sum()))
-                out["px_max"].append(int(nz.max()) if nz.size else 0)
-            yield pd.DataFrame(out)
-
-    return (
-        bf.select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.gif$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "content",
-        )
-        .mapInPandas(
-            kernel, "doc_id long, img_h int, img_w int, px_sum bigint, px_max int"
-        )
-    )
+    bf = _scan_assets(spark.read.format("binaryFile"), path, "gif", "gif")
+    return _image_stats_frame(bf, palette=True)
 
 
 @query(
@@ -843,26 +794,14 @@ def q164_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
 def q165_video_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)  # see q161
     path = materialize_media_files(spark, sf_dir)
-
-    def scan(sub: str, ext: str, alias: str) -> DataFrame:
-        return (
-            spark.read.format("binaryFile")
-            .option("pathGlobFilter", f"*.{ext}")
-            .load(f"{path}/{sub}")
-            .select(
-                F.regexp_extract(F.col("path"), rf"(\d+)\.{ext}$", 1)
-                .cast("long")
-                .alias("doc_id"),
-                F.col("content").alias(alias),
-            )
-        )
-
-    paired = scan("avi", "avi", "avi_bytes").join(
-        F.broadcast(scan("img", "png", "png_bytes")), "doc_id"
+    paired = _scan_assets(
+        spark.read.format("binaryFile"), path, "avi", "avi", "avi_bytes"
+    ).join(
+        F.broadcast(
+            _scan_assets(spark.read.format("binaryFile"), path, "img", "png", "png_bytes")
+        ),
+        "doc_id",
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -926,31 +865,23 @@ def extract_image_features_safe(
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_image
+        from sklearn_raster_spark.operators.multimodal import _image_stats, decode_image
 
         for pdf in batches:
-            out = {id_col: [], "img_h": [], "img_w": [], "px_sum": [],
-                   "px_max": [], "decode_error": []}
+            out = {k: [] for k in (id_col, *_IMAGE_STATS, "decode_error")}
             for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
                 out[id_col].append(int(doc_id))
                 try:
-                    img = decode_image(bytes(payload))
+                    stats = _image_stats(decode_image(bytes(payload)))
+                    error = None
                 except (ValueError, NotImplementedError) as exc:
                     if on_error == "raise":
                         raise
-                    out["img_h"].append(None)
-                    out["img_w"].append(None)
-                    out["px_sum"].append(None)
-                    out["px_max"].append(None)
-                    out["decode_error"].append(f"{type(exc).__name__}: {exc}")
-                    continue
-                px = img.reshape(-1).astype(np.int64)
-                nz = px[px > 0]
-                out["img_h"].append(int(img.shape[0]))
-                out["img_w"].append(int(img.shape[1]))
-                out["px_sum"].append(int(px.sum()))
-                out["px_max"].append(int(nz.max()) if nz.size else 0)
-                out["decode_error"].append(None)
+                    stats = (None,) * len(_IMAGE_STATS)
+                    error = f"{type(exc).__name__}: {exc}"
+                for k, v in zip(_IMAGE_STATS, stats):
+                    out[k].append(v)
+                out["decode_error"].append(error)
             yield pd.DataFrame(
                 {
                     id_col: out[id_col],
@@ -1010,22 +941,9 @@ def extract_image_features_safe(
         "shuffle — the error column rides the same mapInPandas.",
 )
 def q166_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(spark)  # see q161
     path = materialize_media_files(spark, sf_dir)
-    bf = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.png")
-        .load(path + "/qtn")
-    )
     feats = extract_image_features_safe(
-        bf.select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.png$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "content",
-        ),
+        _scan_assets(spark.read.format("binaryFile"), path, "qtn", "png"),
         on_error="quarantine",
     )
     return feats.select(
@@ -1138,10 +1056,8 @@ def q167_stream_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         TimestampType,
     )
 
-    from sklearn_raster_spark.session import ensure_workers_can_import
     from sklearn_raster_spark.streaming import run_stream_to_memory
 
-    ensure_workers_can_import(spark)  # see q161
     path = materialize_media_files(spark, sf_dir)
     # file streaming sources need an explicit schema; binaryFile's is
     # fixed by the format
@@ -1153,18 +1069,9 @@ def q167_stream_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("content", BinaryType()),
         ]
     )
-    bf = (
-        spark.readStream.format("binaryFile")
-        .schema(bf_schema)
-        .option("pathGlobFilter", "*.png")
-        .load(path + "/qtn")
-    )
     feats = extract_image_features_safe(
-        bf.select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.png$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "content",
+        _scan_assets(
+            spark.readStream.format("binaryFile").schema(bf_schema), path, "qtn", "png"
         ),
         on_error="quarantine",
     )

@@ -1000,17 +1000,7 @@ PQ_RERANK_FACTOR = 10  # ADC candidates per final result, exact re-ranked
         "scan is pytest-pinned.",
 )
 def q136_pq_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.utils.fold_kernels import pq_codes_kernel
-
     base, centroids = _pq_fit(spark, sf_dir)
-    # r12 OPT: vectorized encode (see q135) — identical codes
-    coded = base.select(
-        F.col("vec_id").alias("nid"),
-        pq_codes_kernel(centroids)(
-            F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
-        ).alias("codes"),
-    )
-
     # driver-side LUTs for the (tiny, fixed) query set: lut[s][c] =
     # ||query_sub_s - centroid_{s,c}||^2
     q_rows = (
@@ -1031,12 +1021,32 @@ def q136_pq_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = spark.createDataFrame(
         [(qid, lut) for qid, lut in luts], "qid int, lut array<array<double>>"
     )
-
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(PQ_SUBSPACES - 1)),
         F.lit(0.0),
         lambda acc, s: acc
         + F.element_at(F.element_at("lut", s + 1), F.element_at("codes", s + 1) + 1),
+    )
+    return _pq_adc_rerank(spark, sf_dir, base, centroids, queries, adc)
+
+
+def _pq_adc_rerank(
+    spark: SparkSession, sf_dir: str, base: DataFrame, codebooks, queries: DataFrame, adc
+) -> DataFrame:
+    """q136/q160's search: encode ``base`` against ``codebooks``, score
+    every (query, corpus row) pair by ``adc`` — a Column over the
+    query's ``lut`` and the row's ``codes`` from the broadcast
+    ``queries`` (qid, lut) — cut PQ_ANN_TOP * PQ_RERANK_FACTOR
+    candidates per query by (adc_dist, nid), and re-rank them by exact
+    squared distance into the top PQ_ANN_TOP."""
+    from sklearn_raster_spark.utils.fold_kernels import pq_codes_kernel
+
+    # r12 OPT: vectorized encode (see q135) — identical codes
+    coded = base.select(
+        F.col("vec_id").alias("nid"),
+        pq_codes_kernel(codebooks)(
+            F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
+        ).alias("codes"),
     )
     scored = (
         coded.crossJoin(F.broadcast(queries))
@@ -1076,7 +1086,7 @@ def q136_pq_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         reranked.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= PQ_ANN_TOP)
-        .select("qid", "nid", "adc_dist", "exact_dist", F.col("rn").cast("int"))
+        .select("qid", "nid", "adc_dist", "exact_dist", F.col("rn").cast("int").alias("rn"))
     )
 
 
@@ -1603,27 +1613,16 @@ def _pqp_oracle() -> str:
         "cut. Reference analog: kneighbors (estimator.py:345-518).",
 )
 def q160_pq_adc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.utils.fold_kernels import pq_codes_kernel
+    from sklearn_raster_spark.utils.fold_kernels import pq_lut_kernel
 
     base = _pq_base(spark, sf_dir)
     embedding_dim(read_table(spark, sf_dir, "embeddings"), expect=_EMB_DIM)
-    # r12 OPT: vectorized encode (see q135) — identical codes, so the
-    # DuckDB oracle grade is unaffected (hash-verified this round);
-    # the query-LUT folds stay JVM expressions (N_QUERIES rows only)
-    coded = base.select(
-        F.col("vec_id").alias("nid"),
-        pq_codes_kernel(_PQP_CODEBOOKS)(
-            F.array(*[f"sub{s}" for s in range(PQ_SUBSPACES)])
-        ).alias("codes"),
-    )
     # per-query LUTs via the Arrow kernel — lut[s][c] =
     # ||query_sub_s - codebook[s][c]||^2, identical sequential-fold
     # values, still computed in-engine (executor-side, never the
     # driver). r12 OPT: the expression form embedded 8x16 centroid
     # literal arrays; ANALYZING that tree cost ~5 s at sf0.1 for five
     # query rows — the plan, not the data, was the bottleneck.
-    from sklearn_raster_spark.utils.fold_kernels import pq_lut_kernel
-
     queries = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         pq_lut_kernel(_PQP_CODEBOOKS)(
@@ -1637,39 +1636,4 @@ def q160_pq_adc_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(F.col("codes"), s + 1) + 1,
         )
         adc = term if adc is None else adc + term
-    scored = (
-        coded.crossJoin(F.broadcast(queries))
-        .filter(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", F.round(adc, 6).alias("adc_dist"))
-    )
-    w_adc = Window.partitionBy("qid").orderBy("adc_dist", "nid")
-    cands = (
-        scored.withColumn("arn", F.row_number().over(w_adc))
-        .filter(F.col("arn") <= PQ_ANN_TOP * PQ_RERANK_FACTOR)
-        .select("qid", "nid", "adc_dist")
-    )
-    emb = read_table(spark, sf_dir, "embeddings")
-    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
-    )
-    ne = emb.select(F.col("vec_id").alias("nid"), F.col("embedding").alias("n_emb"))
-    exact_d = F.aggregate(
-        F.zip_with(
-            "q_emb", "n_emb",
-            lambda a, b: (a.cast("double") - b.cast("double"))
-            * (a.cast("double") - b.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    reranked = (
-        cands.join(F.broadcast(qe), "qid")
-        .join(ne, "nid")
-        .select("qid", "nid", "adc_dist", F.round(exact_d, 6).alias("exact_dist"))
-    )
-    w = Window.partitionBy("qid").orderBy("exact_dist", "nid")
-    return (
-        reranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PQ_ANN_TOP)
-        .select("qid", "nid", "adc_dist", "exact_dist", F.col("rn").cast("int").alias("rn"))
-    )
+    return _pq_adc_rerank(spark, sf_dir, base, _PQP_CODEBOOKS, queries, adc)

@@ -138,71 +138,6 @@ def q59_stateful_running_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(sink)
 
 
-try:  # Spark 4 transformWithState surface
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover - older runtimes
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class RunningStatsProcessor(StatefulProcessor):
-    """The same per-user running-stats machine on Spark 4's
-    ``transformWithStateInPandas`` API: explicit typed state variables
-    (ValueState) managed by the stateful-processor handle, RocksDB
-    state store, timer support — the successor extension point to
-    applyInPandasWithState, kept as a second backend so both custom-
-    state surfaces are exercised."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("agg", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterable[pd.DataFrame]:
-        existing = self._state.get()
-        n, vmax = existing if existing is not None else (0, None)
-        (user_id,) = key
-        uid = int(user_id) if pd.notna(user_id) else None  # NULL key group (NaN via Arrow)
-        for pdf in rows:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            ids, ns, maxes = [], [], []
-            for ev_id, v in zip(pdf["event_id"], pdf["value"]):
-                n += 1
-                if pd.notna(v) and (vmax is None or float(v) > vmax):
-                    vmax = float(v)
-                ids.append(int(ev_id))
-                ns.append(n)
-                maxes.append(vmax)
-            yield pd.DataFrame(
-                {
-                    "event_id": pd.array(ids, dtype="Int64"),
-                    "user_id": pd.array([uid] * len(ids), dtype="Int64"),
-                    "running_n": pd.array(ns, dtype="Int64"),
-                    "running_max": pd.array(maxes, dtype="Float64"),
-                }
-            )
-        self._state.update((n, vmax))
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """transformWithStateInPandas backend (requires the RocksDB state
-    store provider, bundled with Spark 4; set by the caller/test).
-    Output is identical to ``running_user_stats_stream``."""
-    from sklearn_raster_spark.session import ensure_workers_can_import
-
-    ensure_workers_can_import(events.sparkSession)
-    return (
-        events.select("event_id", "user_id", "ts", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningStatsProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 @query(
     "q107_stream_dedup",
     oracle="SELECT DISTINCT user_id, event_type FROM events",

@@ -302,14 +302,12 @@ def raster_stack_to_wide(long_df: DataFrame, n_bands: int = N_BANDS) -> DataFram
     read wide straight from its files (pivoting an unpivot is the
     identity); any other long frame is pivoted, with explicit pivot
     values so the plan stays static (no driver-side distinct scan)."""
+    from sklearn_raster_spark.operators.reshape import long_to_wide
+
     files = vars(long_df).get("_raster_files")
     if files is not None:
         return _read_raster_wide(long_df.sparkSession, files, n_bands)
-    return (
-        long_df.groupBy("y", "x")
-        .pivot("band", list(range(n_bands)))
-        .agg(F.first("value"))
-    )
+    return long_to_wide(long_df, ["y", "x"], "band", "value", list(range(n_bands)))
 
 
 # -- CF band metadata (reference features.py:257-260: per-band attrs

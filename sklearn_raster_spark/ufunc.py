@@ -115,6 +115,15 @@ class Output:
             return default_nodata_for(self.dtype)
         return validate_nodata(self.nodata, self.dtype)
 
+    def _nodata_input(self) -> dict[str, Any]:
+        """The ``FeatureFrame.nodata_input`` entries for these columns
+        once written: the resolved sentinel, NaN registered as None.
+        With no entry, masked rows would read as VALID downstream and a
+        chained op would consume the sentinel as a real value."""
+        nd = self.resolved_nodata()
+        nd = None if isinstance(nd, float) and np.isnan(nd) else nd
+        return {n: nd for n in self.names}
+
 
 class FeaturewiseUfunc:
     """Wrap ``func((n, n_features) ndarray) -> ndarray | tuple`` with
@@ -242,11 +251,7 @@ class FeaturewiseUfunc:
         out_ff = FeatureFrame(
             df=result,
             features=tuple(n for o in outputs for n in o.names),
-            nodata_input={
-                n: (None if isinstance(nd := o.resolved_nodata(), float) and np.isnan(nd) else nd)
-                for o in outputs
-                for n in o.names
-            },
+            nodata_input={n: nd for o in outputs for n, nd in o._nodata_input().items()},
             metadata=dict(ff.metadata),
         )
         out_ff._append_history(f"ufunc:{getattr(func, '__name__', 'callable')}")

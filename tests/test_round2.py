@@ -138,6 +138,21 @@ def test_pca_compiled_matches_numpy(spark):
     np.testing.assert_allclose(got_inv, want_inv, rtol=1e-9, atol=1e-12)
 
 
+def test_compiled_paths_record_their_method(spark):
+    """Each expression-compiled path names its own method in the frame
+    history: the inverse leg records inverse_transform, not transform."""
+    cols = ["f0", "f1", "f2"]
+    X = np.random.default_rng(5).normal(size=(40, 3))
+    est = SparkEstimator(PCANP(n_components=2))
+    est.fit(pd.DataFrame(X, columns=cols))
+    ff = FeatureFrame.from_dataframe(spark.createDataFrame(pd.DataFrame(X, columns=cols)), cols)
+
+    fwd = est.transform(ff)
+    inv = est.inverse_transform(fwd)
+    assert fwd.metadata["history"][-1].split(" ", 1)[1] == "transform:compiled"
+    assert inv.metadata["history"][-1].split(" ", 1)[1] == "inverse_transform:compiled"
+
+
 # -- LSH kneighbors backend ---------------------------------------------
 
 

@@ -1,10 +1,6 @@
 """Streaming correctness: each stream's availableNow run must equal its
 batch dual (which is itself oracle-checked against DuckDB)."""
 
-import importlib.util
-
-import pytest
-
 from sklearn_raster_spark.operators.events import q26_tumbling_window
 from sklearn_raster_spark.streaming import (
     run_stream_to_memory,
@@ -139,67 +135,6 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         for so in p["stateOperators"]
     )
     assert dropped == 2
-
-
-@pytest.mark.skipif(
-    not importlib.util.find_spec("google"),
-    reason="transformWithStateInPandas state server needs protobuf, "
-    "absent from this container (documented env limit, like the "
-    "multimodal codec stubs); the processor + builder are still "
-    "importable and plan-checkable",
-)
-def test_transform_with_state_matches_group_state(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas backend produces the exact
-    rows of the applyInPandasWithState backend (and therefore of the
-    q59 window oracle), with state carried across micro-batches."""
-    from sklearn_raster_spark.operators.stateful import (
-        running_user_stats_stream,
-        running_user_stats_tws,
-    )
-    from sklearn_raster_spark.streaming import (
-        read_events_stream,
-        run_append_stream_to_memory,
-    )
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        tws = running_user_stats_tws(read_events_stream(spark, sf_dir))
-        run_append_stream_to_memory(tws, "tws_stats")
-        got = {
-            (r.event_id, r.running_n, round(r.running_max, 9))
-            for r in spark.table("tws_stats").collect()
-        }
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    base = running_user_stats_stream(read_events_stream(spark, sf_dir))
-    run_append_stream_to_memory(base, "gs_stats")
-    want = {
-        (r.event_id, r.running_n, round(r.running_max, 9))
-        for r in spark.table("gs_stats").collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_tws_builder_constructs_plan(spark, sf_dir):
-    """Even without the protobuf runtime the transformWithState
-    builder must produce a valid streaming plan (analysis succeeds,
-    schema correct) — the documented surface is real, only the
-    container's worker protocol dependency is missing."""
-    from sklearn_raster_spark.operators.stateful import running_user_stats_tws
-    from sklearn_raster_spark.streaming import read_events_stream
-
-    df = running_user_stats_tws(read_events_stream(spark, sf_dir))
-    assert df.isStreaming
-    assert [f.name for f in df.schema.fields] == [
-        "event_id", "user_id", "running_n", "running_max",
-    ]
 
 
 def test_stream_static_join_matches_batch(spark, sf_dir):
