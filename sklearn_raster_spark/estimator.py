@@ -369,6 +369,11 @@ class SparkEstimator:
         else:
             names = tuple(f"feature_{i}" for i in range(self.n_features_in_ or 0))
         out = Output(names, dtype="double", nodata=nodata_output)
+        if isinstance(ff, DataFrame) and features is None and callable(
+            getattr(self.estimator, "get_feature_names_out", None)
+        ):
+            # the inverse reads the TRANSFORMED columns, not the fit inputs
+            features = list(map(str, self.estimator.get_feature_names_out()))
         if compile_expressions and callable(
             getattr(self.estimator, "inverse_transform_to_spark_columns", None)
         ):

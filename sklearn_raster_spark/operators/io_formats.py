@@ -160,40 +160,24 @@ def q74_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def materialize_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """One-time write of orders partitioned by order month under /tmp
-    (idempotent): the partitioned-sink layout a 100 TB fact table
-    actually uses — each month is a directory, so time-windowed scans
-    touch only matching directories (partition pruning), not the whole
-    table."""
-    import os
-    import tempfile
+    """One-time write of orders partitioned by order month (a derived
+    fixture, utils/cache.py): the partitioned-sink layout a 100 TB fact
+    table actually uses — each month is a directory, so time-windowed
+    scans touch only matching directories (partition pruning), not the
+    whole table."""
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    from sklearn_raster_spark.sources import table_path
-    from sklearn_raster_spark.utils.cache import (
-        cache_is_current,
-        source_fingerprint,
-        write_cache_marker,
-    )
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_io", sf_name, "orders_by_month")
-    # source-fingerprinted marker (shared mechanism, utils/cache.py):
-    # Spark's own _SUCCESS is empty, so a separate marker records the
-    # source parquet's fingerprint — a regenerated fixture at the same
-    # sf_dir rebuilds instead of silently serving the stale layout
-    marker = os.path.join(path, "_SRC_FINGERPRINT")
-    fp = source_fingerprint(table_path(sf_dir, "orders"))
-    if not cache_is_current(marker, fp):
-        orders = read_table(spark, sf_dir, "orders")
+    def build(path: str) -> None:
         (
-            orders.withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
+            read_table(spark, sf_dir, "orders")
+            .withColumn("o_month", F.date_format("o_orderdate", "yyyy-MM"))
             .repartition("o_month")  # one shuffle -> one file per partition dir
             .write.mode("overwrite")
             .partitionBy("o_month")
             .parquet(path)
         )
-        write_cache_marker(marker, fp)
-    return path
+
+    return derived_fixture(spark, sf_dir, "orders", "orders_by_month", build)
 
 
 @query(
@@ -261,48 +245,18 @@ BINFILE_MOD = 20  # one payload file per doc_id % this == 0
 
 
 def materialize_binary_files(spark: SparkSession, sf_dir: str) -> str:
-    """One-time directory of raw per-document payload files (idempotent
-    via a marker): each selected doc's text is written as the BYTES of
-    one `<doc_id>.bin` by the EXECUTORS (foreachPartition — payloads
-    never route through the driver, the same layout a 100 TB lake
-    stores media in: one object per asset, keyed by id)."""
+    """One-time directory of raw per-document payload files (a derived
+    fixture, utils/cache.py): each selected doc's text is written as
+    the BYTES of one `<doc_id>.bin` by the EXECUTORS (foreachPartition
+    — payloads never route through the driver, the same layout a
+    100 TB lake stores media in: one object per asset, keyed by id).
+    Executors write with plain open(), so the fixture directory must
+    be a filesystem they share with the driver."""
     import os
-    import shutil
-    import tempfile
 
-    from sklearn_raster_spark.sources import table_path
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    # executors write with plain open(): correct only when they share
-    # the driver's filesystem. Locally /tmp stands in for the shared
-    # object store a cluster would use; fail fast rather than silently
-    # reading a partial directory on a multi-node master.
-    master = spark.sparkContext.master
-    if not master.startswith("local"):
-        raise NotImplementedError(
-            f"materialize_binary_files writes to a local tempdir; on "
-            f"master={master!r} point the output at shared storage "
-            "(s3://, hdfs://) instead"
-        )
-    from sklearn_raster_spark.utils.cache import (
-        cache_is_current,
-        source_fingerprint,
-        write_cache_marker,
-    )
-
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_io", sf_name, "binfiles")
-    marker = os.path.join(path, "_SUCCESS")
-    # The marker carries a content fingerprint of the SOURCE parquet
-    # (size + mtime of every documents part-file; shared mechanism in
-    # utils/cache.py, applied to every /tmp materializer): if the
-    # fixture at this sf_dir is ever regenerated, the fingerprint
-    # changes and the payload directory rebuilds instead of silently
-    # serving stale .bin files against a new documents table.
-    fingerprint = source_fingerprint(table_path(sf_dir, "documents"))
-    if not cache_is_current(marker, fingerprint):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
         # only non-empty payloads become asset files: a NULL text has no
         # bytes to write, and Spark's binaryFile source SILENTLY SKIPS
         # 0-byte files at scan time (verified on 4.1: an empty .bin
@@ -323,8 +277,8 @@ def materialize_binary_files(spark: SparkSession, sf_dir: str) -> str:
                 os.replace(tmp, os.path.join(path, f"{r.doc_id}.bin"))
 
         docs.select("doc_id", "text").foreachPartition(write_files)
-        write_cache_marker(marker, fingerprint)
-    return path
+
+    return derived_fixture(spark, sf_dir, "documents", "binfiles", build)
 
 
 @query(
@@ -370,41 +324,13 @@ def materialize_jsonl_shards(spark: SparkSession, sf_dir: str) -> str:
     serializes its partition to one shard, doc_id min/max embedded in
     the filename for reader-side pruning). Documents are range-
     partitioned on doc_id first so shard ranges are disjoint and the
-    q169 range predicate can elide whole files. Idempotent via the
-    shared fingerprint marker."""
-    import os
-    import shutil
-    import tempfile
-
-    from sklearn_raster_spark.sources import table_path
+    q169 range predicate can elide whole files. A derived fixture
+    (utils/cache.py), which also ships the package the connector
+    pickles by reference."""
     from sklearn_raster_spark.sources.pyds import register_jsonl_shards
-    from sklearn_raster_spark.utils.cache import (
-        cache_is_current,
-        source_fingerprint,
-        write_cache_marker,
-    )
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    master = spark.sparkContext.master
-    base = os.environ.get("SPARK_GRAFT_MEDIA_DIR")
-    if base is None:
-        if not master.startswith("local"):
-            raise NotImplementedError(
-                f"materialize_jsonl_shards defaults to a driver-local "
-                f"tempdir; on master={master!r} set SPARK_GRAFT_MEDIA_DIR "
-                "to a shared-storage path visible to all executors"
-            )
-        base = os.path.join(tempfile.gettempdir(), "spark_graft_io")
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(base, sf_name, "jsonl_shards")
-    marker = os.path.join(path, "_SUCCESS")
-    fingerprint = source_fingerprint(table_path(sf_dir, "documents")) + ":v1"
-    if not cache_is_current(marker, fingerprint):
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
-        from sklearn_raster_spark.session import ensure_workers_can_import
-
-        ensure_workers_can_import(spark)  # writer pickles by reference
+    def build(path: str) -> None:
         register_jsonl_shards(spark)
         docs = read_table(spark, sf_dir, "documents").select(
             "doc_id", "text", "lang", "source", "n_chars"
@@ -420,8 +346,8 @@ def materialize_jsonl_shards(spark: SparkSession, sf_dir: str) -> str:
             .mode("append")
             .save()
         )
-        write_cache_marker(marker, fingerprint)
-    return path
+
+    return derived_fixture(spark, sf_dir, "documents", "jsonl_shards", build, version=":v1")
 
 
 PYDS_LO, PYDS_HI = 100, 900  # q169's doc_id slice (pruning window)
@@ -460,12 +386,8 @@ PYDS_LO, PYDS_HI = 100, 900  # q169's doc_id slice (pruning window)
         "native reader for.",
 )
 def q169_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
     from sklearn_raster_spark.sources.pyds import register_jsonl_shards
 
-    # the DataSource class pickles BY REFERENCE: executors must import
-    # sklearn_raster_spark.sources.pyds (the q68/q161 pattern)
-    ensure_workers_can_import(spark)
     register_jsonl_shards(spark)
     # a foreign session (the driver harness) may not carry the
     # session.py default. Left set for the session: planning happens
@@ -527,11 +449,9 @@ def q169_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         "listing cost matches any file streaming source.",
 )
 def q170_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
     from sklearn_raster_spark.sources.pyds import register_jsonl_shards
     from sklearn_raster_spark.streaming import run_stream_to_memory
 
-    ensure_workers_can_import(spark)  # see q169
     register_jsonl_shards(spark)
     path = materialize_jsonl_shards(spark, sf_dir)
     stream = (
@@ -562,29 +482,16 @@ def materialize_jsonl_shards_corrupt(spark: SparkSession, sf_dir: str) -> str:
       non-gzip bytes (contributes zero rows, must not fail the scan)
 
     Driver-side rewrite of the small engine-written fixture (this is
-    a test-fixture builder, not a data path); idempotent via the
-    shared fingerprint marker."""
+    a test-fixture builder, not a data path); a derived fixture
+    (utils/cache.py)."""
+    import gzip
+    import json
     import os
-    import shutil
 
-    from sklearn_raster_spark.sources import table_path
-    from sklearn_raster_spark.utils.cache import (
-        cache_is_current,
-        source_fingerprint,
-        write_cache_marker,
-    )
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    clean = materialize_jsonl_shards(spark, sf_dir)
-    path = os.path.join(os.path.dirname(clean), "jsonl_shards_corrupt")
-    marker = os.path.join(path, "_SUCCESS")
-    fingerprint = source_fingerprint(table_path(sf_dir, "documents")) + ":v1-corrupt"
-    if not cache_is_current(marker, fingerprint):
-        import gzip
-        import json
-
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.makedirs(path, exist_ok=True)
+    def build(path: str) -> None:
+        clean = materialize_jsonl_shards(spark, sf_dir)
         for name in os.listdir(clean):
             if not name.endswith(".jsonl.gz") or name.startswith("."):
                 continue
@@ -604,8 +511,10 @@ def materialize_jsonl_shards_corrupt(spark: SparkSession, sf_dir: str) -> str:
                         dst.write(json.dumps(rec, ensure_ascii=False) + "\n")
         with open(os.path.join(path, "part-x-impostor.0-0.jsonl.gz"), "wb") as f:
             f.write(b"\x00not gzip at all\xff" * 16)
-        write_cache_marker(marker, fingerprint)
-    return path
+
+    return derived_fixture(
+        spark, sf_dir, "documents", "jsonl_shards_corrupt", build, version=":v1-corrupt"
+    )
 
 
 @query(
@@ -637,10 +546,8 @@ def materialize_jsonl_shards_corrupt(spark: SparkSession, sf_dir: str) -> str:
         "applies it to media bytes.",
 )
 def q174_pyds_permissive_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from sklearn_raster_spark.session import ensure_workers_can_import
     from sklearn_raster_spark.sources.pyds import register_jsonl_shards
 
-    ensure_workers_can_import(spark)  # see q169
     register_jsonl_shards(spark)
     # the reader implements pushFilters, and pyspark ASSERTS (rather
     # than degrading) when the capability conf is off — a bare/foreign

@@ -349,7 +349,7 @@ def q175_als_ann_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     kernel_schema = "item int, cell int, vf array<float>"
-    items = item_f.mapInPandas(assign_items, schema=kernel_schema).persist()
+    items = shared_lineage(item_f.mapInPandas(assign_items, schema=kernel_schema), eager=False)
 
     # 2b. LIST BALANCING (the FAISS IVF discipline): implicit-ALS item
     # factors pile up near the origin, so one k-means cell can hold a

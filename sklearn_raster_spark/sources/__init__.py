@@ -27,12 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (TPC-H
-# semantics: region=5, nation=25 rows always; supplier/part/customer grow
-# with sf but stay broadcastable into the 10s-of-GB range via AQE).
-BROADCASTABLE = {"region", "nation", "supplier", "part", "customer"}
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -79,38 +73,22 @@ def read_table(spark: SparkSession, sf_dir: str, name: str, fmt: str = "parquet"
 
 
 def materialize_table_as(spark: SparkSession, sf_dir: str, name: str, fmt: str) -> str:
-    """Write a one-time CSV/JSON copy of a parquet table under /tmp and
-    return its path (idempotent via the _SUCCESS marker). Only used to
-    exercise the non-parquet read paths against driver testdata, which
-    ships as parquet."""
-    import tempfile
+    """Path of a one-time single-file CSV/JSON/ORC copy of a parquet
+    table (a derived fixture, utils/cache.py). Only used to exercise
+    the non-parquet read paths against driver testdata, which ships as
+    parquet."""
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    from sklearn_raster_spark.utils.cache import (
-        cache_is_current,
-        source_fingerprint,
-        write_cache_marker,
-    )
+    if fmt not in ("csv", "json", "orc"):
+        raise KeyError(f"materialize supports csv/json/orc, not {fmt!r}")
 
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_io", sf_name, f"{name}.{fmt}")
-    # fingerprinted marker (utils/cache.py): a regenerated fixture at
-    # the same sf_dir rebuilds the derived copy instead of serving a
-    # stale one against the fresh oracle
-    marker = os.path.join(path, "_SRC_FINGERPRINT")
-    fp = source_fingerprint(table_path(sf_dir, name))
-    if not cache_is_current(marker, fp):
-        df = spark.read.parquet(table_path(sf_dir, name))
-        writer = df.coalesce(1).write.mode("overwrite")
+    def build(path: str) -> None:
+        writer = spark.read.parquet(table_path(sf_dir, name)).coalesce(1).write.mode("overwrite")
         if fmt == "csv":
-            writer.option("header", "true").csv(path)
-        elif fmt == "json":
-            writer.json(path)
-        elif fmt == "orc":
-            writer.orc(path)
-        else:
-            raise KeyError(f"materialize supports csv/json/orc, not {fmt!r}")
-        write_cache_marker(marker, fp)
-    return path
+            writer = writer.option("header", "true")
+        getattr(writer, fmt)(path)
+
+    return derived_fixture(spark, sf_dir, name, f"{name}.{fmt}", build)
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

@@ -45,7 +45,6 @@ ingest path end-to-end with zero float arithmetic.
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import Iterator
 
 import numpy as np
@@ -73,30 +72,14 @@ GRID_WIDTH = 50
 N_BANDS = 8
 
 
-def materialize_raster_stack(
-    spark: SparkSession, sf_dir: str, n_bands: int = N_BANDS
-) -> list[tuple[int, str]]:
-    """Write one ``.npy`` grid per band under /tmp (idempotent) and
-    return the (band, path) file list. Band b is embedding dim b over
-    vec_id order, reshaped to (n_vecs // GRID_WIDTH, GRID_WIDTH)."""
-    from sklearn_raster_spark.utils.cache import (
-        cache_is_current,
-        source_fingerprint,
-        write_cache_marker,
-    )
+def materialize_raster_stack(spark: SparkSession, sf_dir: str) -> list[tuple[int, str]]:
+    """Write one ``.npy`` grid per band (a derived fixture,
+    utils/cache.py) and return the (band, path) file list. Band b is
+    embedding dim b over vec_id order, reshaped to
+    (n_vecs // GRID_WIDTH, GRID_WIDTH)."""
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), "spark_graft_raster", sf_name)
-    os.makedirs(root, exist_ok=True)
-    paths = [(b, os.path.join(root, f"band_{b}.npy")) for b in range(n_bands)]
-    # fingerprinted marker (utils/cache.py): regenerated embeddings at
-    # the same sf_dir rebuild the band files instead of serving stale
-    # grids against the fresh oracle
-    marker = os.path.join(root, "_SRC_FINGERPRINT")
-    fp = source_fingerprint(os.path.join(sf_dir, "embeddings.parquet"))
-    if not cache_is_current(marker, fp) or not all(
-        os.path.exists(p) for _, p in paths
-    ):
+    def build(root: str) -> None:
         emb = (
             spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
             # a NULL vector contributes no grid row: the band cut is
@@ -109,12 +92,12 @@ def materialize_raster_stack(
         )
         mat = np.array([np.asarray(e, dtype=np.float64) for e in emb["embedding"]])
         n_rows = (mat.shape[0] // GRID_WIDTH) * GRID_WIDTH
-        for b, p in paths:
+        for b in range(N_BANDS):
             grid = mat[:n_rows, b].reshape(-1, GRID_WIDTH)
-            np.save(p + ".tmp.npy", grid)
-            os.replace(p + ".tmp.npy", p)
-        write_cache_marker(marker, fp)
-    return paths
+            np.save(os.path.join(root, f"band_{b}.npy"), grid)
+
+    root = derived_fixture(spark, sf_dir, "embeddings", "raster", build)
+    return [(b, os.path.join(root, f"band_{b}.npy")) for b in range(N_BANDS)]
 
 
 def _decode_grid(path: str) -> np.ndarray:

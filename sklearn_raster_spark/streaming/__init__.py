@@ -14,7 +14,6 @@ exactly the state story a 1000-executor streaming job needs.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,35 +21,22 @@ from pyspark.sql import functions as F
 from sklearn_raster_spark.sources import table_path
 
 
-def _stream_dir(sf_dir: str) -> str:
+def _stream_dir(spark: SparkSession, sf_dir: str) -> str:
     """Spark's file stream source requires a DIRECTORY; the testdata is
-    one parquet file per table. Symlink it into a tmp dir once.
+    one parquet file per table, so a derived fixture (utils/cache.py)
+    holds one symlink to it. The link targets the RESOLVED file, and
+    that path rides in the fixture version: the fingerprint follows
+    symlinks and sees only size and mtime, so a same-basename fixture
+    dir that was deleted and recreated elsewhere would otherwise look
+    current while its link dangles."""
+    from sklearn_raster_spark.utils.cache import derived_fixture
 
-    The dir is keyed by the sf_dir BASENAME, so two different parents
-    with the same basename would collide — re-validate the link target
-    every call (and replace broken links) rather than trusting bare
-    existence, the same staleness posture as the fingerprinted /tmp
-    materializer caches (utils/cache.py)."""
-    sf_name = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(tempfile.gettempdir(), "spark_graft_streams", sf_name, "events")
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    target = table_path(sf_dir, "events")
-    if os.path.lexists(link) and not os.path.islink(link):
-        # a non-symlink occupying the link path (a prior run copied
-        # instead of symlinking, or a partial cleanup) has NO staleness
-        # check — islink is False, exists is True, and it would be
-        # served forever (round-7 ADVICE). Remove it and re-link.
-        import shutil
+    target = os.path.realpath(table_path(sf_dir, "events"))
 
-        shutil.rmtree(link) if os.path.isdir(link) else os.remove(link)
-    if os.path.islink(link) and os.path.realpath(link) != os.path.realpath(target):
-        os.remove(link)  # stale: same basename, different source dir
-    if os.path.islink(link) and not os.path.exists(link):
-        os.remove(link)  # broken: source was deleted/regenerated
-    if not os.path.exists(link):
-        os.symlink(target, link)
-    return d
+    def build(d: str) -> None:
+        os.symlink(target, os.path.join(d, "events.parquet"))
+
+    return derived_fixture(spark, sf_dir, "events", "events_stream", build, version=":" + target)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +47,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     static = spark.read.parquet(table_path(sf_dir, "events"))
     stream = (
         spark.readStream.schema(static.schema)
-        .parquet(_stream_dir(sf_dir))
+        .parquet(_stream_dir(spark, sf_dir))
     )
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
@@ -121,12 +107,13 @@ def dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-file fixture silently flip the grade."""
     import glob as _glob
 
-    stream_files = _glob.glob(os.path.join(_stream_dir(sf_dir), "*.parquet"))
+    d = _stream_dir(spark, sf_dir)
+    stream_files = _glob.glob(os.path.join(d, "*.parquet"))
     if len(stream_files) != 1:
         raise AssertionError(
             f"dedup_stream's DISTINCT oracle requires single-batch "
             f"delivery (one stream file); found {len(stream_files)} in "
-            f"{_stream_dir(sf_dir)!r} — regrade q107 rows-only or "
+            f"{d!r} — regrade q107 rows-only or "
             "extend the oracle to watermark-aware semantics"
         )
     ev = read_events_stream(spark, sf_dir)

@@ -19,6 +19,11 @@ blocks — the consumer recomputes from lineage, correctness unaffected.
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import os
+import shutil
+import tempfile
 from collections import deque
 
 from pyspark.sql import DataFrame
@@ -56,18 +61,18 @@ def release_shared_caches() -> None:
 
 
 # ---------------------------------------------------------------------
-# Source-fingerprinted /tmp materializer caches.
+# Source-fingerprinted derived fixtures.
 #
 # Several operators materialize a one-time derived copy of a testdata
-# table under /tmp (CSV/JSON/ORC twins, the partitioned-orders sink,
-# raster band files, binary payload files). A bare "_SUCCESS exists"
-# gate silently serves STALE derived files if the parquet at the same
-# sf_dir path is ever regenerated — the query then reads the old data
-# while its DuckDB oracle reads the new, turning every such grade into
-# a false mismatch. The fix applied to materialize_binary_files in
-# round 6 is shared here so ALL materializers get the same guard:
-# the cache marker stores a fingerprint (size+mtime of every source
-# part file) and any change rebuilds the cache.
+# table on disk (CSV/JSON/ORC twins, the partitioned-orders sink,
+# raster band files, binary payload and media files, connector shards,
+# the events stream directory). A bare "marker exists" gate silently
+# serves STALE derived files if the parquet at the same sf_dir path is
+# ever regenerated — the query then reads the old data while its DuckDB
+# oracle reads the new, turning every such grade into a false mismatch.
+# ``derived_fixture`` is the one place that decides where a fixture
+# lives and when it is stale: the marker stores a fingerprint (size +
+# mtime of every source part file) and any change rebuilds the fixture.
 
 
 def source_fingerprint(src_path: str) -> str:
@@ -75,10 +80,6 @@ def source_fingerprint(src_path: str) -> str:
     source — a file or a directory of part files. Fails fast on an
     empty part list: md5("") would disable staleness detection
     permanently."""
-    import glob
-    import hashlib
-    import os
-
     parts = (
         sorted(glob.glob(os.path.join(src_path, "*.parquet")))
         if os.path.isdir(src_path)
@@ -100,19 +101,44 @@ def source_fingerprint(src_path: str) -> str:
     return hashlib.md5(stamp.encode()).hexdigest()
 
 
-def cache_is_current(marker_path: str, fingerprint: str) -> bool:
-    """True iff the marker exists and records exactly ``fingerprint``."""
-    import os
+def derived_fixture(spark, sf_dir: str, table: str, name: str, build, version: str = "") -> str:
+    """Path of the derived fixture ``name`` cut from ``table`` of
+    ``sf_dir``, rebuilt by ``build(path)`` whenever the source's
+    fingerprint (plus ``version``, which a builder bumps when its own
+    output changes) differs from the one recorded at the last build.
 
-    if not os.path.exists(marker_path):
-        return False
-    with open(marker_path) as f:
-        return f.read().strip() == fingerprint
+    The fixture lives at ``<base>/<sf_dir basename>/<name>``, where
+    ``base`` is ``$SPARK_GRAFT_MEDIA_DIR`` (shared storage visible to
+    the driver and every executor) or, on a local master only, a
+    driver-local temp dir. A rebuild clears the directory first and
+    writes the marker last, so an interrupted build is never served.
+    The package ships to executors on every call: fixture writers and
+    the queries' own kernels both import it there."""
+    from sklearn_raster_spark.session import ensure_workers_can_import
+    from sklearn_raster_spark.sources import table_path
 
-
-def write_cache_marker(marker_path: str, fingerprint: str) -> None:
-    import os
-
-    os.makedirs(os.path.dirname(marker_path), exist_ok=True)
-    with open(marker_path, "w") as f:
+    base = os.environ.get("SPARK_GRAFT_MEDIA_DIR")
+    if base is None:
+        master = spark.sparkContext.master
+        if not master.startswith("local"):
+            raise NotImplementedError(
+                f"derived fixture {name!r} defaults to a driver-local "
+                f"tempdir; on master={master!r} set SPARK_GRAFT_MEDIA_DIR "
+                "to a shared-storage path visible to all executors"
+            )
+        base = os.path.join(tempfile.gettempdir(), "spark_graft_io")
+    ensure_workers_can_import(spark)
+    path = os.path.join(base, os.path.basename(os.path.normpath(sf_dir)), name)
+    marker = os.path.join(path, "_SRC_FINGERPRINT")
+    fingerprint = source_fingerprint(table_path(sf_dir, table)) + version
+    if os.path.exists(marker):
+        with open(marker) as f:
+            if f.read() == fingerprint:
+                return path
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.makedirs(path)
+    build(path)
+    with open(marker, "w") as f:
         f.write(fingerprint)
+    return path

@@ -153,6 +153,24 @@ def test_compiled_paths_record_their_method(spark):
     assert inv.metadata["history"][-1].split(" ", 1)[1] == "inverse_transform:compiled"
 
 
+@pytest.mark.parametrize("compiled", [True, False], ids=["compiled", "arrow"])
+def test_inverse_transform_plain_dataframe_reads_transformed_columns(spark, compiled):
+    """A plain DataFrame without ``features=`` feeds the inverse from
+    the transformed columns (get_feature_names_out), on both paths."""
+    cols = ["f0", "f1", "f2"]
+    X = np.random.default_rng(6).normal(size=(30, 3))
+    est = SparkEstimator(PCANP(n_components=2))
+    est.fit(pd.DataFrame(X, columns=cols))
+    pdf = pd.DataFrame(X, columns=cols).assign(rid=np.arange(len(X)))
+    fwd = est.transform(spark.createDataFrame(pdf), compile_expressions=compiled).df
+
+    inv = est.inverse_transform(fwd, compile_expressions=compiled)
+    assert list(inv.features) == cols
+    got = np.array(inv.df.orderBy("rid").select(*cols).collect(), dtype=float)
+    want = est.estimator.inverse_transform(est.estimator.transform(X))
+    np.testing.assert_allclose(got, want, rtol=1e-9, atol=1e-12)
+
+
 # -- LSH kneighbors backend ---------------------------------------------
 
 

@@ -243,7 +243,7 @@ def test_binaryfile_cache_invalidates_on_fingerprint_change(spark, sf_dir):
     )
 
     path = materialize_binary_files(spark, sf_dir)
-    marker = os.path.join(path, "_SUCCESS")
+    marker = os.path.join(path, "_SRC_FINGERPRINT")
     with open(marker) as f:
         good = f.read()
     assert good.strip(), "marker must carry a fingerprint"
