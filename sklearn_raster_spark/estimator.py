@@ -591,10 +591,11 @@ class SparkEstimator:
         # plane — building 64 lit Columns per plane through py4j costs
         # more driver time than the whole local execution), floored into
         # buckets. The query side CARRIES its feature array through the
-        # explode: the bucket join below is broadcast (fit side is the
-        # small one), so scan -> hash -> explode -> join -> candidate-set
-        # aggregate fuses into ONE map-side stage — no shuffle of
-        # candidate pairs, no join back to the query vectors. (Round 3
+        # explode: fit_keys is a local relation whose size the planner
+        # sees, so while it is under the broadcast threshold the bucket
+        # join is broadcast and scan -> hash -> explode -> join ->
+        # candidate-set aggregate fuses into ONE map-side stage — no
+        # shuffle of candidate pairs, no join back to the query vectors. (Round 3
         # shipped the pair distinct + re-join formulation: two extra
         # full-candidate shuffles, plus ML-pipeline hashing overhead.)
         # r12 OPT (guide §4.2): the per-plane zip_with/aggregate dots ran
@@ -631,7 +632,7 @@ class SparkEstimator:
         # + its feature array), not candidate pairs. (Round 3 shipped a
         # pair-level distinct + re-join formulation: two full-candidate
         # shuffles that dominated the driver bench.)
-        cand_sets = q_keys.join(F.broadcast(fit_keys), ["_tbl", "_bucket"]).groupBy(
+        cand_sets = q_keys.join(fit_keys, ["_tbl", "_bucket"]).groupBy(
             "_rid"
         ).agg(
             F.collect_set("fit_idx").alias("cand_idx"),

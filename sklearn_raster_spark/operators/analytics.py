@@ -394,7 +394,7 @@ def q91_ordered_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = read_table(spark, sf_dir, "region")
     nation = read_table(spark, sf_dir, "nation")
     return (
-        nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        nation.join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("r_name")
         .agg(
             F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias(
@@ -481,9 +481,9 @@ def q103_chi_square_contingency(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols_t = cells.groupBy("source").agg(F.sum("n").cast("double").alias("col_tot"))
     exp = F.col("row_tot") * F.col("col_tot") / F.col("n_total")
     return (
-        cells.join(F.broadcast(rows_t), "lang")
-        .join(F.broadcast(cols_t), "source")
-        .crossJoin(F.broadcast(tot))
+        cells.join(rows_t, "lang")
+        .join(cols_t, "source")
+        .crossJoin(tot)
         .select(
             "lang",
             "source",
@@ -580,7 +580,7 @@ def q110_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = (F.col("value") - mean) / F.nullif(std, F.lit(0.0))
     return (
-        ev.join(F.broadcast(stats), "event_type")
+        ev.join(stats, "event_type")
         .select(
             "event_id",
             "event_type",
@@ -636,7 +636,7 @@ def q111_quantile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile("l_quantity", F.lit(0.50)).alias("c2"),
         F.percentile("l_quantity", F.lit(0.75)).alias("c3"),
     )
-    binned = li.crossJoin(F.broadcast(cuts)).select(
+    binned = li.crossJoin(cuts).select(
         F.when(F.col("l_quantity") < F.col("c1"), 0)
         .when(F.col("l_quantity") < F.col("c2"), 1)
         .when(F.col("l_quantity") < F.col("c3"), 2)

@@ -226,7 +226,7 @@ def stage_clean(base: DataFrame, n_docs: int) -> DataFrame:
         .select("shingle", F.lit(1).alias("_hit"))
     )
     frac = (
-        sh2.join(F.broadcast(boiler), "shingle", "left")
+        sh2.join(boiler, "shingle", "left")
         .groupBy("doc_id")
         .agg(
             (F.count("_hit").cast("double") / F.count(F.lit(1))).alias("boiler_frac")

@@ -15,8 +15,8 @@ engine, `datasets/_base.py`); the designs are Spark-first:
 
 - boilerplate (q121): shingle document frequency is one explode +
   groupBy; the "boilerplate set" (df >= threshold) is tiny by Zipf's
-  law and broadcast back over the shingle stream. Nothing here holds
-  per-doc state: two linear passes and one broadcast join.
+  law and joined back over the shingle stream. Nothing here holds
+  per-doc state: two linear passes and one join.
 - incremental dedup (q122): the corpus side is touched exactly once
   (tokenize + explode); the batch side is small. Candidate generation
   joins batch tokens to corpus tokens on the PPJoin prefix (tokens
@@ -83,10 +83,10 @@ BOILER_DF = 40  # a shingle in >= this many distinct docs is boilerplate
         "reports what fraction of its shingle positions are covered by "
         "them. Plan: one tokenize-explode pass (narrow), one "
         "(shingle -> distinct-doc-count) aggregate whose df>=K output "
-        "is tiny by Zipf's law and broadcast, one hash aggregate back "
-        "per doc. Linear in corpus size, no self-join anywhere — at "
-        "100 TB the boilerplate set is the only globally-shared state "
-        "and it fits in a broadcast by construction.",
+        "is small by Zipf's law and joins back, one hash aggregate "
+        "back per doc. Linear in corpus size, no self-join anywhere — "
+        "at 100 TB the boilerplate set is the only globally-shared "
+        "state.",
 )
 def q121_boilerplate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
@@ -97,11 +97,11 @@ def q121_boilerplate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_shingles(BOILER_N).alias("shingle"),
     )
     # the tokenize+slide lineage feeds both the df aggregate and the
-    # per-doc coverage join. LAZY persist (r12 opt, guide §5 / the
-    # q149 §7b pattern): the boiler BROADCAST build is a separate job
-    # that runs first and populates the cache as a side effect, so the
-    # eager count() materialization pass was pure overhead; lineage is
-    # deterministic (split+slide of parquet text, no RNG/generated ids)
+    # per-doc coverage join. LAZY persist (the q149 pattern): the
+    # boiler side's build stage runs first and populates the cache as
+    # a side effect, so an eager count() materialization pass would be
+    # pure overhead; lineage is deterministic (split+slide of parquet
+    # text, no RNG/generated ids)
     shingles = shared_lineage(shingles, eager=False)
     boiler = (
         shingles.groupBy("shingle")
@@ -110,7 +110,7 @@ def q121_boilerplate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("shingle", F.lit(1).alias("_hit"))
     )
     per = (
-        shingles.join(F.broadcast(boiler), "shingle", "left")
+        shingles.join(boiler, "shingle", "left")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shingles"), F.count("_hit").alias("n_boiler"))
     )
@@ -193,14 +193,14 @@ def q122_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(F.split("text", " "), lambda w: F.xxhash64(w))
         ).alias("ts"),
     )
-    # LAZY persist (r12 opt, guide §5): the exact-gate broadcast build
-    # (inc side, a separate job) populates the cache before the main
-    # action; deterministic lineage (md5/xxhash of parquet text)
+    # LAZY persist: the exact gate's build stage (inc side) populates
+    # the cache before the main action; deterministic lineage
+    # (md5/xxhash of parquet text)
     base = shared_lineage(base, eager=False)
     inc = base.filter(F.col("b") >= INC_BUCKET)
     cor = base.filter(F.col("b") < INC_BUCKET)
 
-    # exact gate: content-hash semi join (batch side tiny -> broadcast)
+    # exact gate: content-hash semi join of the small batch side
     exact = (
         inc.join(cor.select(F.col("h").alias("h")), "h", "left_semi")
         .select("doc_id")
@@ -261,8 +261,8 @@ def q122_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         inc.select("doc_id")
-        .join(F.broadcast(exact), "doc_id", "left")
-        .join(F.broadcast(near), "doc_id", "left")
+        .join(exact, "doc_id", "left")
+        .join(near, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("n_near", F.lit(0)).alias("n_near"),
@@ -383,7 +383,7 @@ def q123_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("k"),
     ).select("tok", "exact_n", "k.row", "k.bucket")
     est = (
-        keys.join(F.broadcast(cms), ["row", "bucket"])
+        keys.join(cms, ["row", "bucket"])
         .groupBy("tok", "exact_n")
         .agg(F.min("cnt").alias("est_n"))
     )

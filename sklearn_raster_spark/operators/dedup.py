@@ -64,8 +64,9 @@ def ppjoin_prefix_index(toks: DataFrame, threshold: float, carry: tuple = ()) ->
     Tokens are globally ordered by ascending document frequency (ties
     by token); each doc indexes ONLY its first |d| - ceil(t*|d|) + 1
     tokens in that order — any pair with Jaccard >= t must collide on
-    at least one prefix token. The df table is |vocab| rows (tiny at
-    any corpus size, Heaps' law) and broadcast; prefix selection runs
+    at least one prefix token. The df table is |vocab| rows (Heaps'
+    law), so the planner broadcasts it while it is under the session's
+    threshold and shuffles it above that; prefix selection runs
     directly on the exploded tokens with a per-doc row_number, so the
     ranked token arrays of the naive formulation never materialize.
     Returns (doc_id, *carry, ntok, tok, _rn)."""
@@ -76,7 +77,7 @@ def ppjoin_prefix_index(toks: DataFrame, threshold: float, carry: tuple = ()) ->
     w_doc = Window.partitionBy("doc_id").orderBy("df", "tok")
     prefix_len = (F.col("ntok") - F.ceil(F.lit(threshold) * F.col("ntok")) + 1).cast("int")
     return (
-        exploded.join(F.broadcast(tok_df), "tok")
+        exploded.join(tok_df, "tok")
         .withColumn("_rn", F.row_number().over(w_doc))
         .filter(F.col("_rn") <= F.greatest(prefix_len, F.lit(1)))
         .select("doc_id", *carry, "ntok", "tok", "_rn")
@@ -673,8 +674,8 @@ def q151_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "whole three-stage pipeline is hash-checked end to end. Scale "
         "shape: the only additions over q51+q84 are one left join on "
         "doc_id and the components loop's O(log diameter) rounds — "
-        "near-dup graphs are small-world, and the keeper map is tiny "
-        "relative to the corpus (broadcastable at 100 TB).",
+        "near-dup graphs are small-world, and the keeper map holds "
+        "near-dup nodes only.",
 )
 def q104_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sklearn_raster_spark.operators.graph import connected_components
@@ -684,13 +685,9 @@ def q104_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q51 pairs are DISTINCT (doc_a, doc_b) with doc_a < doc_b
     comps = connected_components(pairs, src="doc_a", dst="doc_b", assume_distinct=True)
     keeper = F.coalesce(F.col("component"), F.col("doc_id"))
-    # r12 OPT (guide §3.1): the keeper map is near-dup nodes only —
-    # tiny relative to the corpus by construction (the docstring's
-    # 100 TB argument) — so broadcast it instead of shuffling every
-    # corpus doc_id into a sort-merge join.
     return (
         docs.select("doc_id")
-        .join(F.broadcast(comps), docs.doc_id == comps.node, "left")
+        .join(comps, docs.doc_id == comps.node, "left")
         .select(
             "doc_id",
             keeper.alias("keeper"),

@@ -595,7 +595,7 @@ def q140_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
     # densify over every ACTIVE day so the running count is reported
     # even on days that minted no new users
     days = ev.select(F.col("ts").cast("date").alias("day")).distinct()
-    per_day = days.join(F.broadcast(firsts), "day", "left").select(
+    per_day = days.join(firsts, "day", "left").select(
         "day", F.coalesce("new_users", F.lit(0)).alias("new_users")
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
@@ -631,8 +631,7 @@ def q140_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
         "cohorted by first-activity week, each cell = how many of a "
         "cohort were active in a given week, as a fraction of cohort "
         "size. Plan: ONE user_id aggregate derives cohorts, the "
-        "cohort map joins back onto events (broadcast — the user "
-        "dimension is always smaller than the event stream), distinct "
+        "cohort map joins back onto events, distinct "
         "(user, week) pairs collapse before the cell count, and the "
         "tiny week x week matrix joins its diagonal sizes. Every "
         "aggregate is partial-combinable; nothing holds per-user "
@@ -646,7 +645,7 @@ def q141_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sizes = cohorts.groupBy("cohort_week").agg(F.count(F.lit(1)).alias("cohort_size"))
     activity = (
-        ev.join(F.broadcast(cohorts), "user_id")
+        ev.join(cohorts, "user_id")
         .select(
             "user_id", "cohort_week", F.date_trunc("week", "ts").cast("date").alias("activity_week")
         )
@@ -655,7 +654,7 @@ def q141_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = activity.groupBy("cohort_week", "activity_week").agg(
         F.count(F.lit(1)).alias("n_active")
     )
-    return cells.join(F.broadcast(sizes), "cohort_week").select(
+    return cells.join(sizes, "cohort_week").select(
         "cohort_week",
         "activity_week",
         "n_active",

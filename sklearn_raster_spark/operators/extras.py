@@ -289,11 +289,7 @@ def q134_data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) - F.count_distinct("o_orderkey")).alias("n_violations")
     ).select(F.lit("orders").alias("tbl"), F.lit("unique_key").alias("chk"), "n_violations")
     fk_cust = (
-        orders.join(
-            F.broadcast(customer.select("c_custkey")),
-            orders.o_custkey == F.col("c_custkey"),
-            "left",
-        )
+        orders.join(customer.select("c_custkey"), orders.o_custkey == F.col("c_custkey"), "left")
         .agg(F.count_if(F.col("c_custkey").isNull()).alias("n_violations"))
         .select(F.lit("orders").alias("tbl"), F.lit("fk_customer").alias("chk"), "n_violations")
     )

@@ -342,7 +342,7 @@ def q139_mode_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     counts = (
         orders.join(
-            F.broadcast(customer.select("c_custkey", "c_mktsegment")),
+            customer.select("c_custkey", "c_mktsegment"),
             orders.o_custkey == F.col("c_custkey"),
         )
         .groupBy("c_mktsegment", "o_orderpriority")

@@ -32,18 +32,15 @@ from sklearn_raster_spark.sources import read_table
     JOIN region r ON n.n_regionkey = r.r_regionkey
     """,
     doc="CSV source path: nation and region are round-tripped through "
-        "CSV (quoted text fields with commas included) and joined with "
-        "a broadcast hash join; the oracle runs on the parquet "
+        "CSV (quoted text fields with commas included) and joined; "
+        "the oracle runs on the parquet "
         "originals, so a hash match proves byte-exact CSV fidelity.",
 )
 def q49_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = read_table(spark, sf_dir, "nation", fmt="csv")
     region = read_table(spark, sf_dir, "region", fmt="csv")
     return (
-        nation.join(
-            F.broadcast(region),
-            nation["n_regionkey"] == region["r_regionkey"],
-        )
+        nation.join(region, nation["n_regionkey"] == region["r_regionkey"])
         .select(
             "n_nationkey",
             "n_name",

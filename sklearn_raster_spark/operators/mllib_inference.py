@@ -358,12 +358,13 @@ def q175_als_ann_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Split every oversized cell into hash sub-cells of bounded size;
     # users probing a split cell probe ALL its sub-cells, so the
     # candidate set (and recall) is unchanged — only the parallelism
-    # changes. The split map is |cells|-sized: broadcast-joined.
+    # changes. The split map is |cells|-sized and built from pandas, so the
+    # planner sees its size.
     counts = {r["cell"]: r["n"] for r in items.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()}
     tgt = max(512, 2 * max(1, sum(counts.values())) // max(1, len(counts)))
     splits = [(int(c), int(-(-n // tgt))) for c, n in counts.items()]
-    split_df = F.broadcast(
-        spark.createDataFrame(splits, "cell int, n_sub int")
+    split_df = spark.createDataFrame(
+        pd.DataFrame(splits, columns=["cell", "n_sub"]), "cell int, n_sub int"
     )
 
     # 2c. user probes target NON-EMPTY cells only (ADVICE r11): k-means

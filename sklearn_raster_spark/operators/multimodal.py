@@ -645,8 +645,7 @@ JPEG_MAX_ERR = 3  # |decoded - source| bound at quality 100 (DCT rounding)
         "doc's pixel grid as a REAL baseline JPEG at quality 100 "
         "(sources/jpeg.py — Annex K tables, Huffman entropy coding, "
         "DCT), two binaryFile scans load the .jpg and the lossless "
-        ".png twin, an equi-join pairs them per doc_id (PNG side "
-        "broadcast — it is a bounded sample), and a mapInPandas "
+        ".png twin, an equi-join pairs them per doc_id, and a mapInPandas "
         "kernel decodes BOTH containers and emits the JPEG's header "
         "geometry plus jpeg_close = (max |jpeg - png| <= "
         f"{JPEG_MAX_ERR}). Geometry is SQL-exact from the source "
@@ -654,7 +653,7 @@ JPEG_MAX_ERR = 3  # |decoded - source| bound at quality 100 (DCT rounding)
         "a broken Huffman table, quant order, or IDCT flips it to "
         "false and the oracle mismatch surfaces in the driver grade. "
         "Scale: file-per-asset scans, per-payload decode, one "
-        "broadcast equi-join — no shuffle grows with corpus size "
+        "equi-join — no shuffle grows with corpus size "
         "beyond the sampled asset set. "
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
@@ -663,9 +662,7 @@ def q163_jpeg_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired = _scan_assets(
         spark.read.format("binaryFile"), path, "jpg", "jpg", "jpg_bytes"
     ).join(
-        F.broadcast(
-            _scan_assets(spark.read.format("binaryFile"), path, "img", "png", "png_bytes")
-        ),
+        _scan_assets(spark.read.format("binaryFile"), path, "img", "png", "png_bytes"),
         "doc_id",
     )
 
@@ -749,7 +746,7 @@ def q164_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "split each sampled doc's pixel grid into 8-row frames and "
         "write a REAL Motion-JPEG AVI (RIFF hdrl/movi/idx1 container "
         "+ quality-100 T.81 frames — sources/video.py), binaryFile "
-        "scans pair each .avi with its lossless .png twin (broadcast "
+        "scans pair each .avi with its lossless .png twin (an "
         "equi-join), and the kernel decodes the CONTAINER (RIFF walk, "
         "LIST rec descent, per-frame Huffman+DCT) and emits frame "
         "geometry (SQL-exact from the text length) plus frames_close "
@@ -765,9 +762,7 @@ def q165_video_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     paired = _scan_assets(
         spark.read.format("binaryFile"), path, "avi", "avi", "avi_bytes"
     ).join(
-        F.broadcast(
-            _scan_assets(spark.read.format("binaryFile"), path, "img", "png", "png_bytes")
-        ),
+        _scan_assets(spark.read.format("binaryFile"), path, "img", "png", "png_bytes"),
         "doc_id",
     )
 

@@ -382,7 +382,7 @@ def q106_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bytes the broadcast table carried; a bloom only works at all if
     # that fits one node.
     words = build_bloom_words(train_sh, "shingle", m_bits)
-    bitmap = F.broadcast(
+    bitmap = (
         spark.range(m_bits // 64)
         .select(F.col("id").alias("word"))
         .join(words, "word", "left")
@@ -713,7 +713,7 @@ def q126_grouped_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(hash_bucket(F.col("c_custkey")), F.lit(GROUP_FOLDS)).alias("fold"),
     )
     orders = read_table(spark, sf_dir, "orders")
-    joined = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+    joined = orders.join(cust, orders.o_custkey == cust.c_custkey)
     return joined.groupBy("fold").agg(
         F.count_distinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -852,7 +852,7 @@ def q146_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", F.explode(F.sequence(F.lit(0), F.lit(NEG_SLOTS - 1))).alias("slot")
     ).select("c_custkey", "slot", F.pmod(slot_hash, F.lit(n_parts)).alias("pidx"))
     cands = (
-        slots.join(F.broadcast(idx), "pidx")
+        slots.join(idx, "pidx")
         .groupBy("c_custkey", "p_partkey")
         .agg(F.min("slot").alias("slot"))
     )

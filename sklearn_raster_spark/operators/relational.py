@@ -6,8 +6,10 @@ mandated by BASELINE.json, expressed purely with DataFrame built-ins so
 Catalyst keeps pushdown/pruning/codegen.
 
 Scale notes (100 TB design point), per query below:
-- dims (region/nation/supplier/part/customer) join via broadcast hash
-  join — no shuffle of the fact side;
+- dim joins (region/nation/supplier/part/customer) are planned by
+  size: a dim under the session's broadcast threshold is broadcast (no
+  shuffle of the fact side), a larger one (customer at scale) is a
+  shuffle join;
 - fact-fact joins (orders x lineitem) are shuffle joins on the join key;
   AQE handles skew. At 100 TB the right move is bucketing both tables
   by orderkey at write time — the plan here is bucketing-compatible
@@ -18,6 +20,7 @@ Scale notes (100 TB design point), per query below:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -141,7 +144,7 @@ def q02_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o_orderkey
     LIMIT 10
     """,
-    doc="customer(broadcast) ⋈ orders ⋈ lineitem shuffle join, hash agg, "
+    doc="customer ⋈ orders ⋈ lineitem join, hash agg, "
         "top-10 with unique tie-break (TakeOrderedAndProject).",
 )
 def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -154,7 +157,7 @@ def q03_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ep, disc = dec("l_extendedprice"), dec(F.lit(1.0) - F.col("l_discount"))
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .groupBy(li.l_orderkey.alias("o_orderkey"), "o_orderdate")
         .agg(dsum(ep * disc, "revenue"))
@@ -197,7 +200,7 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q05 — multi-way join with two broadcast dims (TPC-H Q5 analog)
+# q05 — multi-way join across four dims (TPC-H Q5 analog)
 # ---------------------------------------------------------------------------
 
 @query(
@@ -217,8 +220,8 @@ def q04_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND o.o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY n.n_name
     """,
-    doc="6-table join: one fact-fact shuffle join (orders⋈lineitem), all "
-        "dims broadcast; region filter prunes before the join.",
+    doc="6-table join: one fact-fact shuffle join (orders⋈lineitem), "
+        "four dim joins; region filter prunes before the join.",
 )
 def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = read_table(spark, sf_dir, "customer")
@@ -233,13 +236,13 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     ep, disc = dec("l_extendedprice"), dec(F.lit(1.0) - F.col("l_discount"))
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .join(
-            F.broadcast(s),
+            s,
             (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
         )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(dsum(ep * disc, "revenue"))
     )
@@ -276,7 +279,7 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q07 — broadcast dim snowflake join
+# q07 — dim snowflake join
 # ---------------------------------------------------------------------------
 
 @query(
@@ -291,15 +294,15 @@ def q06_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name
     """,
-    doc="Snowflake broadcast joins (nation, region are tiny at every sf).",
+    doc="Snowflake dim joins (nation, region are tiny at every sf).",
 )
 def q07_customers_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = read_table(spark, sf_dir, "customer")
     n = read_table(spark, sf_dir, "nation")
     r = read_table(spark, sf_dir, "region")
     return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        c.join(n, c.c_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy("r_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
@@ -376,8 +379,8 @@ def q10_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ep, disc = dec("l_extendedprice"), dec(F.lit(1.0) - F.col("l_discount"))
     return (
         o.join(li, o.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(dsum(ep * disc, "revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
@@ -750,19 +753,16 @@ def q19_orders_above_customer_avg(spark: SparkSession, sf_dir: str) -> DataFrame
     ) b ON p.p_retailprice >= b.lo AND p.p_retailprice < b.hi
     GROUP BY b.band_name
     """,
-    doc="Theta/range join against a tiny broadcast band table (BNLJ).",
+    doc="Theta/range join against a tiny band table (BNLJ).",
 )
 def q20_price_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = read_table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = spark.createDataFrame(pd.DataFrame(
         [("low", 0.0, 950.0), ("mid", 950.0, 980.0), ("high", 980.0, 100000.0)],
-        "band_name string, lo double, hi double",
-    )
+        columns=["band_name", "lo", "hi"],
+    ))
     return (
-        p.join(
-            F.broadcast(bands),
-            (p.p_retailprice >= bands.lo) & (p.p_retailprice < bands.hi),
-        )
+        p.join(bands, (p.p_retailprice >= bands.lo) & (p.p_retailprice < bands.hi))
         .groupBy("band_name")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),

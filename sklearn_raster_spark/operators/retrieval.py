@@ -186,9 +186,9 @@ def q132_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     scored = (
-        tf.join(F.broadcast(df), "term")
+        tf.join(df, "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .select(
             "doc_id",
             F.round(term_score, 6).cast("decimal(18,6)").alias("term_score"),

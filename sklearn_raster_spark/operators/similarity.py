@@ -17,6 +17,7 @@ semantics (Window + row_number).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -109,7 +110,7 @@ def q55_knn_cosine_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm(F.col("embedding")).alias("nnrm"),
     )
     sims = (
-        corpus.crossJoin(F.broadcast(queries))
+        corpus.crossJoin(queries)
         .filter(F.col("nid") != F.col("qid"))
         .select(
             "qid",
@@ -186,8 +187,6 @@ def q56_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "asserted).",
 )
 def q54_kneighbors_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from sklearn_raster_spark.estimator import SparkEstimator
     from sklearn_raster_spark.estimators import KNeighborsRegressorNP
     from sklearn_raster_spark.operators.inference import (
@@ -340,8 +339,6 @@ def ivf_topk(
     real-world embeddings are where IVF's probe ratio pays off.
     """
     import numpy as np
-    import pandas as pd
-
     from pyspark.sql.types import IntegerType
 
     from sklearn_raster_spark.session import ensure_workers_can_import
@@ -388,7 +385,7 @@ def ivf_topk(
         )
     )
     sims = (
-        corpus.join(F.broadcast(queries), "cell")
+        corpus.join(queries, "cell")
         .filter(F.col("nid") != F.col("qid"))
         .select(
             "qid",
@@ -676,7 +673,7 @@ def q112_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(127.0) / F.nullif(F.max(F.abs(F.col("x"))), F.lit(0.0))).alias("scale")
     )
     qv = F.floor(F.col("x") * F.col("scale") + F.lit(0.5)).cast("int")
-    q = ex.join(F.broadcast(sc), "i").select("vec_id", "i", qv.alias("qv"))
+    q = ex.join(sc, "i").select("vec_id", "i", qv.alias("qv"))
     return q.groupBy("vec_id").agg(
         F.sum(F.col("qv") * F.col("i")).cast("bigint").alias("checksum"),
         F.sum(F.abs("qv")).cast("bigint").alias("l1_norm"),
@@ -775,13 +772,14 @@ def q128_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row in ONE vectorized plane_dots_kernel pass (bit-identical to
     # dot_seq per plane — float multiply commutes bitwise, fold order
     # unchanged; pinned by tests/test_fold_kernels.py). qnrm values are
-    # the Spark-computed ones, re-uploaded and broadcast-joined by
-    # token position, so sim arithmetic is untouched. Oracle hash
+    # the Spark-computed ones, re-uploaded from pandas (a local
+    # relation whose size the planner sees) and joined by token
+    # position, so sim arithmetic is untouched. Oracle hash
     # verified at sf0.001/0.01/0.1.
     q_rows = qv.collect()
     if not q_rows:
         sims = (
-            cv.crossJoin(F.broadcast(qv))
+            cv.crossJoin(qv)
             .filter(F.col("cid") != F.col("qid"))
             .select(
                 "qid",
@@ -806,10 +804,8 @@ def q128_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             [StructField("pos", IntegerType(), False)]
             + [qv.schema["qid"], qv.schema["qlabel"], qv.schema["qnrm"]]
         )
-        meta = spark.createDataFrame(
-            [(i, r["qid"], r["qlabel"], r["qnrm"]) for i, r in enumerate(q_rows)],
-            meta_schema,
-        )
+        meta = pd.DataFrame(q_rows, columns=qv.columns).drop(columns="qe")
+        meta = spark.createDataFrame(meta.rename_axis("pos").reset_index(), meta_schema)
         sims = (
             cv.select(
                 "cid",
@@ -819,7 +815,7 @@ def q128_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "pos", "dot"
                 ),
             )
-            .join(F.broadcast(meta), "pos")
+            .join(meta, "pos")
             .filter(F.col("cid") != F.col("qid"))
             .select(
                 "qid",
@@ -1019,7 +1015,7 @@ def q136_pq_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         luts.append((r["vec_id"], lut))
     queries = spark.createDataFrame(
-        [(qid, lut) for qid, lut in luts], "qid int, lut array<array<double>>"
+        pd.DataFrame(luts, columns=["qid", "lut"]), "qid int, lut array<array<double>>"
     )
     adc = F.aggregate(
         F.sequence(F.lit(0), F.lit(PQ_SUBSPACES - 1)),
@@ -1035,7 +1031,7 @@ def _pq_adc_rerank(
 ) -> DataFrame:
     """q136/q160's search: encode ``base`` against ``codebooks``, score
     every (query, corpus row) pair by ``adc`` — a Column over the
-    query's ``lut`` and the row's ``codes`` from the broadcast
+    query's ``lut`` and the row's ``codes`` from the small
     ``queries`` (qid, lut) — cut PQ_ANN_TOP * PQ_RERANK_FACTOR
     candidates per query by (adc_dist, nid), and re-rank them by exact
     squared distance into the top PQ_ANN_TOP."""
@@ -1049,7 +1045,7 @@ def _pq_adc_rerank(
         ).alias("codes"),
     )
     scored = (
-        coded.crossJoin(F.broadcast(queries))
+        coded.crossJoin(queries)
         .filter(F.col("nid") != F.col("qid"))
         .select("qid", "nid", F.round(adc, 6).alias("adc_dist"))
     )
@@ -1078,7 +1074,7 @@ def _pq_adc_rerank(
         lambda acc, x: acc + x,
     )
     reranked = (
-        cands.join(F.broadcast(qe), "qid")
+        cands.join(qe, "qid")
         .join(ne, "nid")
         .select("qid", "nid", "adc_dist", F.round(exact_d, 6).alias("exact_dist"))
     )
@@ -1260,7 +1256,7 @@ def q155_ann_signlsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("nid"), F.col("embedding").alias("ne"), F.col("nrm").alias("nn")
     )
     sims = (
-        cand.join(F.broadcast(qv), "qid")
+        cand.join(qv, "qid")
         .join(nv, "nid")
         .select(
             "qid",
@@ -1455,7 +1451,7 @@ def ivf_portable_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are already unique — no DISTINCT); probe fraction = IVF_PROBE /
     # IVF_CELLS of the corpus per query, the IVF scale contract
     return (
-        corpus.join(F.broadcast(probes), "cell")
+        corpus.join(probes, "cell")
         .filter(F.col("nid") != F.col("qid"))
         .select(
             "qid",

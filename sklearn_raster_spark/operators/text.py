@@ -283,7 +283,8 @@ def q64_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ORDER is the same monotone ranking within a doc for any "
         "fixed tf). Plan shape: tokenize-explode (narrow), two hash "
         "aggregates, then the document-frequency table joins back "
-        "BROADCAST (vocabulary << corpus at scale), and the per-doc "
+        "(broadcast while the vocabulary is under the session's "
+        "broadcast threshold, shuffled above it), and the per-doc "
         "ranking window partitions on doc_id. The keyword-extraction "
         "primitive for corpus exploration / near-dup triage.",
 )
@@ -296,7 +297,7 @@ def q96_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("term") != "")
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("term").agg(F.count_distinct("doc_id").alias("df"))
-    scored = tf.join(F.broadcast(df), "term").select(
+    scored = tf.join(df, "term").select(
         "doc_id",
         "term",
         F.round(F.col("tf").cast("double") / F.col("df"), 6).alias("score"),
@@ -416,13 +417,11 @@ def q127_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = fuzzy_qgram_candidates(names, "p_name")
     pairs = (
         cand.join(
-            F.broadcast(names).withColumnRenamed("p_name", "name_a")
-            .withColumnRenamed("n_parts", "n_a"),
+            names.withColumnRenamed("p_name", "name_a").withColumnRenamed("n_parts", "n_a"),
             "name_a",
         )
         .join(
-            F.broadcast(names).withColumnRenamed("p_name", "name_b")
-            .withColumnRenamed("n_parts", "n_b"),
+            names.withColumnRenamed("p_name", "name_b").withColumnRenamed("n_parts", "n_b"),
             "name_b",
         )
         .select(
@@ -490,7 +489,7 @@ def fuzzy_qgram_candidates(names: DataFrame, col: str) -> DataFrame:
     sb = short.select(F.col("name").alias("name_b"), F.col("len").alias("len_b"))
     short_pairs = (
         sa.join(
-            F.broadcast(sb),
+            sb,
             (F.col("name_a") < F.col("name_b"))
             & (F.abs(F.col("len_a") - F.col("len_b")) <= FUZZY_MAX_DIST),
         )
@@ -577,7 +576,7 @@ def q145_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_name = labeled.groupBy("hash_cluster").agg(
         F.min("p_name").alias("cluster")
     )
-    members = labeled.join(F.broadcast(cluster_name), "hash_cluster").select(
+    members = labeled.join(cluster_name, "hash_cluster").select(
         "p_name", "cluster"
     )
     w = Window.partitionBy("cluster").orderBy(F.col("n_parts").desc(), "p_name")
@@ -589,7 +588,7 @@ def q145_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wc = Window.partitionBy("cluster")
     return (
-        members.join(F.broadcast(canon), "cluster")
+        members.join(canon, "cluster")
         .select(
             F.col("p_name").alias("name"),
             "cluster",

@@ -24,6 +24,7 @@ import re
 import shutil
 import subprocess
 import tempfile
+import time
 import warnings
 import zipfile
 from pathlib import Path
@@ -92,6 +93,8 @@ _JAVA_OPTS_ENV = (
 _CLASSPATH_ENV = ("SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH", "PYSPARK_SUBMIT_ARGS")
 # the JVM took 12-16 s to write the archive as it exited, on a 4-vCPU host
 _DUMP_EXIT_TIMEOUT_S = 180.0
+# archives of other keys (an older JDK or jar set) idle this long are deleted
+_ARCHIVE_MAX_IDLE_S = 30 * 24 * 3600
 
 
 def _java_home() -> Path | None:
@@ -136,7 +139,9 @@ class ClassArchive:
     ``-XX:ArchiveClassesAtExit=<archive>.tmp.<pid>``: the JVM writes the
     file as it exits, and ``finish_dump`` ends the JVM when Python exits,
     waits for it and moves the file into place only when the JVM exited
-    with code 0 and the file is non-empty. Either launch puts the empty
+    with code 0 and the file is non-empty; it then deletes the archives of
+    other keys that no launch has used for 30 days (a hit refreshes the
+    mtime of its archive). Either launch puts the empty
     directory ``cds/conf`` in place of the Spark conf dir on the classpath:
     the JVM refuses an archive while a non-empty directory is on it.
     """
@@ -181,18 +186,24 @@ class ClassArchive:
             cache = Path(os.environ.get("XDG_CACHE_HOME") or Path.home() / ".cache")
             cache = cache / "sklearn_raster_spark" / "cds"
             (cache / "conf").mkdir(parents=True, exist_ok=True)
+            path = cache / f"{key.hexdigest()[:24]}.jsa"
+            if path.is_file():
+                os.utime(path)
         except OSError:
             return None
         _remove_orphan_dumps(cache)
-        return cls(cache / f"{key.hexdigest()[:24]}.jsa", cache / "conf")
+        return cls(path, cache / "conf")
 
     def java_options(self) -> str:
         """The options this launch adds. The JVM logs every class it
         cannot archive (hundreds of lines) and any archive it refuses to
-        stdout, where callers print their results: that log is off."""
+        stdout, where callers print their results: that log is off. A JVM
+        that crashes on a damaged archive writes its error log into the
+        cache dir, not the caller's working directory."""
+        common = f"-Xlog:cds*=off -XX:ErrorFile={self.path.parent}/hs_err_pid%p.log"
         if self.dump is not None:
-            return f"-XX:ArchiveClassesAtExit={self.dump} -Xlog:cds*=off"
-        return f"-XX:SharedArchiveFile={self.path} -Xlog:cds*=off"
+            return f"-XX:ArchiveClassesAtExit={self.dump} {common}"
+        return f"-XX:SharedArchiveFile={self.path} {common}"
 
     def drop(self, why: str) -> None:
         """Delete the file this launch handed to the JVM, and say so."""
@@ -217,6 +228,7 @@ class ClassArchive:
                 proc.wait()
         if proc.returncode == 0 and self.dump.is_file() and self.dump.stat().st_size > 0:
             os.replace(self.dump, self.path)
+            _remove_idle_archives(self.path)
         else:
             self.dump.unlink(missing_ok=True)
 
@@ -233,6 +245,16 @@ def _remove_orphan_dumps(cache: Path) -> None:
             pass
 
 
+def _remove_idle_archives(current: Path) -> None:
+    """Delete the archives of other keys untouched for
+    ``_ARCHIVE_MAX_IDLE_S``: each JDK update or jar change names a new
+    140-165 MB archive and leaves the old one behind."""
+    cutoff = time.time() - _ARCHIVE_MAX_IDLE_S
+    for jsa in current.parent.glob("*.jsa"):
+        if jsa != current and jsa.stat().st_mtime < cutoff:
+            jsa.unlink(missing_ok=True)
+
+
 def _start_session(app_name: str, master: str, conf: dict[str, str]) -> SparkSession:
     return SparkSession.builder.appName(app_name).master(master).config(map=conf).getOrCreate()
 
@@ -241,8 +263,8 @@ def _launch_with_archive(
     app_name: str, master: str, conf: dict[str, str], archive: ClassArchive
 ) -> SparkSession:
     """Launch the driver JVM from ``archive``. A truncated or corrupt
-    archive can crash the JVM at start (it leaves ``hs_err_pid*.log`` in
-    the working directory): then the archive is deleted and the JVM is
+    archive can crash the JVM at start (its ``hs_err_pid*.log`` goes to
+    the cache dir): then the archive is deleted and the JVM is
     launched once more without it. A JVM that starts with no class sharing
     at all has refused the archive: it is deleted for the next launch."""
     opts = f"{conf.get(_JAVA_OPTS, '')} {archive.java_options()}".strip()

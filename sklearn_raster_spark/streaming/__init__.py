@@ -280,7 +280,7 @@ def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small static dimension (user -> tier) derived deterministically
     from the events table — the enrichment side of the stream-static
     join. At 100 TB this is the classic 'dimension table beside the
-    stream' shape: small, slowly changing, broadcast to every task."""
+    stream' shape: small and slowly changing."""
     static = spark.read.parquet(table_path(sf_dir, "events"))
     return (
         static.select("user_id")
@@ -291,14 +291,15 @@ def user_tier_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def enriched_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: each arriving event is enriched with its
-    user's tier via a BROADCAST join against the static dimension — no
+    user's tier via a join against the static dimension (broadcast
+    while the dimension is under the session's broadcast threshold) — no
     state store involved (unlike stream-stream joins), no watermark
     needed on the static side; the planner re-reads the static relation
     per micro-batch, which is exactly how slowly-changing dims refresh
     mid-stream in production."""
     ev = read_events_stream(spark, sf_dir)
     dim = user_tier_dim(spark, sf_dir)
-    return ev.join(F.broadcast(dim), "user_id").select(
+    return ev.join(dim, "user_id").select(
         "event_id", "user_id", "tier", "event_type", "value"
     )
 

@@ -2,10 +2,10 @@
 
 The JVM-backed tests run each session in a subprocess (this pytest
 process already has its JVM, and only a launch can take an archive),
-with a temporary ``XDG_CACHE_HOME`` and ``cwd=tmp_path``: a JVM that
-crashes on a damaged archive writes ``hs_err_pid*.log`` into its
-working directory. Core dumps are off in the children for the same
-reason.
+with a temporary ``XDG_CACHE_HOME`` and ``cwd=tmp_path``, so a test can
+see that a JVM that crashes on a damaged archive leaves no
+``hs_err_pid*.log`` in its working directory. Core dumps are off in the
+children.
 """
 
 import json
@@ -14,6 +14,7 @@ import resource
 import shutil
 import subprocess
 import sys
+import time
 from pathlib import Path
 from unittest import mock
 
@@ -161,6 +162,8 @@ def test_archive_in_any_state_starts_a_session(dumped, damage, tmp_path, monkeyp
         assert not target.exists()
         why = "did not start with" if damage == "truncated" else "started without sharing, refusing"
         assert f"the driver JVM {why} class-data-sharing archive {target}" in stderr
+    # a JVM that crashed on the archive wrote its error log to the cache dir
+    assert list(tmp_path.glob("hs_err_pid*.log")) == []
     assert _java_processes_naming(cache) == []
 
 
@@ -229,6 +232,14 @@ def test_archive_key_follows_the_classpath_and_jdk(tmp_path, monkeypatch):
     assert base.parent == tmp_path / "cache" / "sklearn_raster_spark" / "cds"
 
 
+def _stand_in_jvm(exit_code: int) -> subprocess.Popen:
+    """Stands in for the JVM: exits with ``exit_code`` once its stdin closes."""
+    return subprocess.Popen(
+        [sys.executable, "-c", f"import os, sys; sys.stdin.read(); os._exit({exit_code % 256})"],
+        stdin=subprocess.PIPE,
+    )
+
+
 @pytest.mark.parametrize(
     "exit_code, written, kept",
     [(0, b"archive", True), (1, b"archive", False), (-9, b"archive", False), (0, b"", False), (0, None, False)],
@@ -237,17 +248,39 @@ def test_only_a_complete_dump_is_moved_into_place(exit_code, written, kept, tmp_
     archive = ClassArchive(tmp_path / "k.jsa", tmp_path / "conf")
     if written is not None:
         archive.dump.write_bytes(written)
-    # stands in for the JVM: exits with ``exit_code`` once its stdin closes
-    jvm = subprocess.Popen(
-        [sys.executable, "-c", f"import os, sys; sys.stdin.read(); os._exit({exit_code % 256})"],
-        stdin=subprocess.PIPE,
-    )
+    jvm = _stand_in_jvm(exit_code)
     if exit_code < 0:
         jvm.kill()
     archive.finish_dump(jvm)
     assert jvm.returncode == exit_code
     assert archive.path.exists() == kept
     assert not archive.dump.exists()
+
+
+def _age(path: Path, days: float) -> None:
+    then = time.time() - days * 24 * 3600
+    os.utime(path, (then, then))
+
+
+def test_a_new_archive_deletes_archives_idle_for_30_days(tmp_path):
+    for name in ("old.jsa", "recent.jsa", "old.txt"):
+        (tmp_path / name).write_bytes(b"x")
+    _age(tmp_path / "old.jsa", 31)
+    _age(tmp_path / "recent.jsa", 29)
+    _age(tmp_path / "old.txt", 31)
+    archive = ClassArchive(tmp_path / "k.jsa", tmp_path / "conf")
+    archive.dump.write_bytes(b"archive")
+    _age(archive.dump, 60)  # the key being written is kept whatever its age
+    archive.finish_dump(_stand_in_jvm(0))
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["k.jsa", "old.txt", "recent.jsa"]
+
+
+def test_a_hit_marks_its_archive_in_use(tmp_path, monkeypatch):
+    path = _archive_path(tmp_path / "cache", monkeypatch)
+    path.write_bytes(b"archive")
+    _age(path, 31)
+    assert ClassArchive.for_launch({"spark.driver.extraJavaOptions": CALLER_OPTS}).dump is None
+    assert time.time() - path.stat().st_mtime < 3600
 
 
 def test_orphaned_dumps_are_removed(tmp_path, monkeypatch):

@@ -2,12 +2,13 @@
 comparison under a non-default Spark configuration and report
 mismatches. Evidence that results do not depend on config axes that
 differ between local[32] and a production cluster (AQE re-planning,
-ANSI mode, shuffle partition count).
+ANSI mode, shuffle partition count, broadcast-versus-shuffle joins).
 
 Usage:
     python tools/config_invariance_sweep.py aqe-off  [sf_dir]
     python tools/config_invariance_sweep.py ansi-off [sf_dir]
     python tools/config_invariance_sweep.py parts-1  [sf_dir]
+    python tools/config_invariance_sweep.py bcast-off [sf_dir]
     python tools/config_invariance_sweep.py 'spark.some.conf=value' [sf_dir]
 
 Default sf_dir is /root/testdata/sf0.01 (the driver's grading scale).
@@ -31,6 +32,12 @@ PRESETS = {
     "ansi-off": {"spark.sql.ansi.enabled": "false"},
     "parts-1": {"spark.sql.shuffle.partitions": "1"},
     "parts-97": {"spark.sql.shuffle.partitions": "97"},
+    # every join side counts as too large to broadcast: the shuffled
+    # branch of the planner's size-based join selection
+    "bcast-off": {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    },
 }
 
 
