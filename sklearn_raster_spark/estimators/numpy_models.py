@@ -13,19 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
-
-def _sql_double(v) -> str:
-    """SQL text of a float64 literal that parses to the IDENTICAL
-    double F.lit(v) would embed: repr() is the shortest exact
-    round-trip for finite values; NaN/Inf have no literal syntax and
-    take the CAST keyword forms Spark folds to the same constants."""
-    v = float(v)
-    if not np.isfinite(v):
-        if np.isnan(v):
-            return "(CAST('NaN' AS DOUBLE))"
-        return "(CAST('Infinity' AS DOUBLE))" if v > 0 else "(CAST('-Infinity' AS DOUBLE))"
-    return f"({v!r}D)"
-
+from sklearn_raster_spark.utils.sqltext import sql_double
 
 
 class StandardScalerNP:
@@ -61,7 +49,7 @@ class StandardScalerNP:
         from pyspark.sql import functions as F
 
         return [
-            F.expr(f"(`{c}` - {_sql_double(m)}) / {_sql_double(s)}")
+            F.expr(f"(`{c}` - {sql_double(m)}) / {sql_double(s)}")
             for c, m, s in zip(feature_cols, self.mean_, self.scale_)
         ]
 
@@ -69,7 +57,7 @@ class StandardScalerNP:
         from pyspark.sql import functions as F
 
         return [
-            F.expr(f"`{c}` * {_sql_double(s)} + {_sql_double(m)}")
+            F.expr(f"`{c}` * {sql_double(s)} + {sql_double(m)}")
             for c, s, m in zip(feature_cols, self.scale_, self.mean_)
         ]
 
@@ -113,7 +101,7 @@ class PCANP:
         out = []
         for j in range(self.n_components):
             terms = "0.0D" + "".join(
-                f" + (`{c}` - {_sql_double(m)}) * {_sql_double(v)}"
+                f" + (`{c}` - {sql_double(m)}) * {sql_double(v)}"
                 for c, m, v in zip(feature_cols, self.mean_, self.components_[j])
             )
             out.append(F.expr(terms))
@@ -125,8 +113,8 @@ class PCANP:
 
         out = []
         for i in range(self.n_features_in_):
-            terms = _sql_double(self.mean_[i]) + "".join(
-                f" + `{c}` * {_sql_double(v)}"
+            terms = sql_double(self.mean_[i]) + "".join(
+                f" + `{c}` * {sql_double(v)}"
                 for c, v in zip(feature_cols, self.components_[:, i])
             )
             out.append(F.expr(terms))
@@ -160,8 +148,8 @@ class LinearRegressionNP:
         # (see StandardScalerNP) — identical left-assoc Add chain
         out = []
         for t in range(coef.shape[0]):
-            terms = _sql_double(intercept[t]) + "".join(
-                f" + `{c}` * {_sql_double(w)}"
+            terms = sql_double(intercept[t]) + "".join(
+                f" + `{c}` * {sql_double(w)}"
                 for c, w in zip(feature_cols, coef[t])
             )
             out.append(F.expr(terms))

@@ -40,7 +40,7 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 _PKG_ZIP: str | None = None
 
 
-def ensure_workers_can_import(spark: SparkSession) -> None:
+def ensure_workers_can_import(spark: SparkSession) -> str:
     """Ship this package to executor Python workers via addPyFile.
 
     Broadcast estimator instances pickle their classes BY REFERENCE
@@ -50,7 +50,8 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     package on the workers' sys.path — a zip via addPyFile is the
     session-agnostic way. Idempotent; the zip (the package's ``.py``
     files stored uncompressed, just under 1 MB) is built once per
-    process in the temp dir and removed when the process exits."""
+    process in the temp dir and removed when the process exits; its
+    driver-local path is returned."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -71,7 +72,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     # remember per-context so repeated applies don't re-add (and don't
     # spam "path has been added already" warnings)
     if getattr(sc, "_srs_pkg_shipped", None) == _PKG_ZIP:
-        return
+        return _PKG_ZIP
     try:
         sc.addPyFile(_PKG_ZIP)
     except Py4JJavaError as exc:
@@ -79,6 +80,7 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         if "already registered" not in str(exc.java_exception):
             raise
     sc._srs_pkg_shipped = _PKG_ZIP
+    return _PKG_ZIP
 
 
 _JAVA_OPTS = "spark.driver.extraJavaOptions"

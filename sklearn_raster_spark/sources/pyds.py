@@ -703,5 +703,26 @@ class JsonlShardsDataSource(DataSource):
 
 
 def register_jsonl_shards(spark) -> None:
-    """Idempotent session registration (re-registering replaces)."""
-    spark.dataSource.register(JsonlShardsDataSource)
+    """Idempotent session registration (re-registering replaces).
+
+    The registration pickles the data source with the context's Python
+    includes and environment as they are NOW, so the package ships
+    first. The includes alone do not reach the streaming planner
+    worker: Spark 4.1's ``PythonStreamingSourceRunner`` looks for them
+    under a ``streaming_job`` subdirectory of the SparkFiles root,
+    which ``addPyFile`` never fills; a driver that imports the package
+    from ``sys.path`` alone then fails to unpickle the source. The
+    registration therefore also carries the driver-local zip on the
+    worker's PYTHONPATH (a path executors lack is skipped there)."""
+    from sklearn_raster_spark.session import ensure_workers_can_import
+
+    env = spark.sparkContext.environment
+    saved = env.get("PYTHONPATH")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [ensure_workers_can_import(spark), saved]))
+    try:
+        spark.dataSource.register(JsonlShardsDataSource)
+    finally:
+        if saved is None:
+            del env["PYTHONPATH"]
+        else:
+            env["PYTHONPATH"] = saved

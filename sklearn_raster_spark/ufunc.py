@@ -5,16 +5,16 @@ Reference parity: src/sklearn_raster/ufunc/_base.py:141-268 orchestrates
 chunk, with NoData skip/scatter-back and declared output metadata". The
 Spark-native translation (SURVEY.md O1-O15):
 
-- chunk            -> Arrow batch inside ``mapInPandas``
+- chunk            -> Arrow batch inside ONE ``mapInPandas`` over all rows
 - declared outputs -> the ``returnType`` StructType (Spark, like the
                       reference, needs output schema before execution)
-- skip-NoData      -> ``filter`` BEFORE the UDF (Catalyst pushes it to
-                      the scan — strictly better than the reference,
-                      which masks after loading)
-- scatter-back     -> ``unionByName`` of masked rows carrying the
-                      ``nodata`` literal for every output column (rows
-                      are unordered in Spark, so no positional restore
-                      is needed)
+- skip-NoData      -> the row mask is evaluated once in the JVM and rides
+                      into the batch as a boolean column; ``func`` sees
+                      only the batch's valid rows (none: no call)
+- scatter-back     -> valid outputs go back in place; one JVM projection
+                      writes each output's ``nodata`` where the mask is
+                      set. The input lineage is read once; masked rows
+                      cross the Python boundary, but never reach ``func``
 - ensure_min_samples -> per-batch pandas padding inside the UDF (not
                       expressible relationally; reference
                       ufunc/_base.py:366-382)
@@ -32,7 +32,10 @@ from pyspark.sql import functions as F
 
 from sklearn_raster_spark.features import FeatureFrame
 from sklearn_raster_spark.utils.casting import default_nodata_for, validate_nodata
+from sklearn_raster_spark.utils.sqltext import sql_ident, sql_literal
 from sklearn_raster_spark.utils.threads import limit_inner_threads
+
+MASK_COL = "__srs_nodata_mask__"  # the row's NoData flag, read by the kernel
 
 def align_feature_frames(ffs: "list[FeatureFrame]", on: "list[str]") -> FeatureFrame:
     """Multi-input alignment (reference O11/O12, ufunc/_meta.py:263-285):
@@ -71,8 +74,6 @@ def count_output_collisions(ff: FeatureFrame, nodata_output) -> int:
     count can separate them (that in-flight distinction is what the
     kernel-side accumulator in FeaturewiseUfunc provides) — raise on
     that ambiguous call instead of silently counting masked rows."""
-    from pyspark.sql import functions as F  # local: keep module header lean
-
     ambiguous = [
         n for n in ff.features if ff.nodata_input.get(n) == nodata_output
     ]
@@ -83,11 +84,10 @@ def count_output_collisions(ff: FeatureFrame, nodata_output) -> int:
             "from colliding valid rows here; use the kernel-side "
             "collision accumulator (warn_if_output_collisions) instead"
         )
-    cond = None
-    for name in ff.features:
-        c = F.col(name) == F.lit(nodata_output)
-        cond = c if cond is None else (cond | c)
-    return ff.df.filter(cond).count() if cond is not None else 0
+    if not ff.features:
+        return 0
+    hit = sql_literal(nodata_output)
+    return ff.df.filter(" OR ".join(f"{sql_ident(n)} = {hit}" for n in ff.features)).count()
 
 
 _NP_DTYPE = {
@@ -165,13 +165,16 @@ class FeaturewiseUfunc:
                     f"has only {total} rows in total."
                 )
         features = list(ff.features)
-        passthrough = [c for c in df.columns if c not in ff.features]
-        keep_cols = df.columns if keep_features else passthrough
-
+        keep_cols = df.columns if keep_features else list(ff.passthrough)
+        if skip_nodata:
+            if MASK_COL in df.columns:
+                raise ValueError(f"column name {MASK_COL!r} is reserved for the NoData mask")
+            df = df.withColumn(MASK_COL, ff.nodata_mask())
+            keep_cols = keep_cols + [MASK_COL]
         in_dtypes = dict(df.dtypes)
         schema = ", ".join(
-            [f"`{c}` {in_dtypes[c]}" for c in keep_cols]
-            + [f"`{n}` {o.dtype}" for o in self.outputs for n in o.names]
+            [f"{sql_ident(c)} {in_dtypes[c]}" for c in keep_cols]
+            + [f"{sql_ident(n)} {o.dtype}" for o in self.outputs for n in o.names]
         )
 
         func = self.func
@@ -189,64 +192,60 @@ class FeaturewiseUfunc:
             for o in outputs
         ]
 
+        def score(X: np.ndarray) -> list[np.ndarray]:
+            """``func`` over a batch's valid rows: one (n, k) array per output."""
+            n = len(X)
+            if nan_fill is not None:
+                X = np.where(np.isnan(X), nan_fill, X)
+            pad = max(0, ensure_min_samples - n)
+            if pad:
+                # reference O6: temporarily unmask dummy rows so
+                # min-sample estimators see a full batch
+                X = np.vstack([X, np.full((pad, X.shape[1]), nan_fill or 0.0)])
+            res = func(X)
+            res = res if isinstance(res, tuple) else (res,)
+            if len(res) != len(outputs):
+                raise ValueError(f"func returned {len(res)} outputs, declared {len(outputs)}")
+            arrs = [(a if a.ndim > 1 else a[:, None])[:n] for a in map(np.asarray, res)]
+            for arr, names in zip(arrs, out_names):
+                if arr.shape != (n, len(names)):
+                    raise ValueError(f"output shape {arr.shape} != ({n}, {len(names)})")
+            if collision_counter is not None:
+                pairs = zip(arrs, out_collision_vals)
+                collision_counter.add(sum(int((a == c).sum()) for a, c in pairs if c is not None))
+            return arrs
+
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             with limit_inner_threads(inner_thread_limit):
                 for pdf in batches:
-                    n = len(pdf)
-                    if n == 0:
+                    if pdf.empty:
                         continue
-                    X = pdf[features].to_numpy(dtype=np.float64, na_value=np.nan)
-                    if nan_fill is not None:
-                        X = np.where(np.isnan(X), nan_fill, X)
-                    pad = max(0, ensure_min_samples - n)
-                    if pad:
-                        # reference O6: temporarily unmask dummy rows so
-                        # min-sample estimators see a full batch
-                        X = np.vstack([X, np.full((pad, X.shape[1]), nan_fill or 0.0)])
-                    res = func(X)
-                    if not isinstance(res, tuple):
-                        res = (res,)
-                    if len(res) != len(outputs):
-                        raise ValueError(
-                            f"func returned {len(res)} outputs, declared {len(outputs)}"
-                        )
                     out = pdf[keep_cols].copy() if keep_cols else pd.DataFrame(index=pdf.index)
+                    valid = ~pdf[MASK_COL].to_numpy(dtype=bool) if skip_nodata else slice(None)
+                    # rows picked in pandas: the matrix keeps the column-major
+                    # layout a whole batch has (a BLAS result can differ by it)
+                    X = pdf.loc[valid, features].to_numpy(dtype=np.float64, na_value=np.nan)
+                    # a batch with no valid row never reaches func; masked
+                    # rows carry a placeholder the nodata projection replaces
+                    res = score(X) if len(X) else [None] * len(outputs)
                     for arr, names, npdt in zip(res, out_names, out_np):
-                        arr = np.asarray(arr)
-                        if arr.ndim == 1:
-                            arr = arr[:, None]
-                        if pad:
-                            arr = arr[:n]
-                        if arr.shape != (n, len(names)):
-                            raise ValueError(
-                                f"output shape {arr.shape} != ({n}, {len(names)})"
-                            )
+                        full = np.zeros((len(pdf), len(names)), dtype=npdt)
+                        if arr is not None:
+                            full[valid] = arr
                         for j, name in enumerate(names):
-                            out[name] = arr[:, j].astype(npdt, copy=False)
-                    if collision_counter is not None:
-                        hits = 0
-                        for arr, cval in zip(res, out_collision_vals):
-                            if cval is not None:
-                                hits += int((np.asarray(arr)[:n] == cval).sum())
-                        if hits:
-                            collision_counter.add(hits)
+                            out[name] = full[:, j]
                     yield out
 
+        result = df.mapInPandas(kernel, schema=schema)
         if skip_nodata:
-            mask = ff.nodata_mask()
-            valid = df.filter(~mask)
-            applied = valid.mapInPandas(kernel, schema=schema)
-            masked = df.filter(mask).select(
-                *[F.col(c) for c in keep_cols],
-                *[
-                    F.lit(o.resolved_nodata()).cast(o.dtype).alias(n)
-                    for o in outputs
-                    for n in o.names
-                ],
-            )
-            result = applied.unionByName(masked)
-        else:
-            result = df.mapInPandas(kernel, schema=schema)
+            # written in the JVM: through Arrow, a NaN encoding that pandas
+            # wrote would come back as NULL
+            result = result.withColumns({
+                n: F.when(F.col(MASK_COL), F.lit(o.resolved_nodata()).cast(o.dtype))
+                .otherwise(F.col(sql_ident(n)))
+                for o in outputs
+                for n in o.names
+            }).drop(MASK_COL)
 
         out_ff = FeatureFrame(
             df=result,

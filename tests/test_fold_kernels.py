@@ -581,7 +581,7 @@ def test_knn_topk_kernel_hostile_rows(spark):
 
 def test_compiled_expression_strings_match_column_form(spark):
     """The r12 string-compiled model expressions (numpy_models
-    _sql_double paths) must produce bit-identical results to the
+    sql_double paths) must produce bit-identical results to the
     chained-Column loops they replaced — awkward literals included
     (negatives, denormals, huge magnitudes, exact dyadics)."""
     import struct as _struct

@@ -199,3 +199,38 @@ def test_portable_fingerprint_joins_are_banded(spark, sf_dir):
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
             "BroadcastHashJoin" in plan
         ), name
+
+
+def test_arrow_predict_is_one_scan_one_map(spark, tmp_path):
+    """Arrow-path predict with NoData skip/scatter plans ONE branch: the
+    parquet input is scanned once and crosses the Python boundary in
+    one MapInPandas; no Union of a second, masked-row branch."""
+    import re
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from sklearn_raster_spark.estimator import SparkEstimator
+    from sklearn_raster_spark.estimators import LinearRegressionNP
+    from sklearn_raster_spark.features import FeatureFrame
+
+    path = str(tmp_path / "frame.parquet")
+    rng = np.random.default_rng(3)
+    X = rng.normal(size=(40, 3))
+    X[::7, 1] = -9999.0
+    pdf = pd.DataFrame(X, columns=["a", "b", "c"]).assign(id=range(40))
+    spark.createDataFrame(pdf).write.parquet(path)
+    ff = FeatureFrame.from_dataframe(
+        spark.read.parquet(path), ["a", "b", "c"], nodata_input=-9999.0
+    )
+    est = SparkEstimator(LinearRegressionNP()).fit(
+        pd.DataFrame(X[1:7], columns=["a", "b", "c"]), pd.Series(X[1:7, 0], name="y")
+    )
+    df = est.predict(ff, compile_expressions=False).df
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    nodes = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
+    assert nodes.count("Scan") == 1, plan
+    assert nodes.count("MapInPandas") == 1, plan
+    assert "Union" not in nodes, plan
+    assert df.filter(F.isnan("y")).count() == 6

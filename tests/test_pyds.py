@@ -500,3 +500,44 @@ def test_manifest_overwrite_never_mixed(spark, tmp_path):
         spark.read.format("jsonl_shards").option("path", path).load().count()
         == 4
     )
+
+
+def test_stream_query_from_foreign_cwd_without_pythonpath(spark, sf_dir, tmp_path):
+    """q170 in a fresh driver that imports the package from ``sys.path``
+    alone, run from a directory outside the repo with no PYTHONPATH:
+    Spark's planner worker unpickles the registered data source and
+    must find the package in the zip the registration carries. The
+    shard fixture is built here first, so the query's own fixture
+    build (which registers again, after shipping) cannot hide a
+    registration made before the package shipped."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from oracle_utils import duckdb_conn, rows_to_multiset
+    from sklearn_raster_spark.operators.io_formats import materialize_jsonl_shards
+    from sklearn_raster_spark.plans.registry import load_all_queries
+
+    name = "q170_stream_python_datasource"
+    materialize_jsonl_shards(spark, sf_dir)
+    repo = str(Path(__file__).resolve().parent.parent)
+    code = (
+        "import json, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from sklearn_raster_spark.plans.registry import load_all_queries\n"
+        "from sklearn_raster_spark.session import get_spark\n"
+        "spark = get_spark(app_name='q170-foreign-cwd', master='local[2]')\n"
+        f"df = load_all_queries()[{name!r}].fn(spark, {sf_dir!r})\n"
+        "print(json.dumps([df.columns, [list(r) for r in df.collect()]]))\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    cols, rows = json.loads(proc.stdout.strip().splitlines()[-1])
+    res = duckdb_conn(sf_dir).execute(load_all_queries()[name].oracle)
+    duck_cols = [d[0] for d in res.description]
+    assert rows and rows_to_multiset(rows, cols) == rows_to_multiset(res.fetchall(), duck_cols)
