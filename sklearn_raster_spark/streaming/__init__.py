@@ -14,6 +14,8 @@ exactly the state story a 1000-executor streaming job needs.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -181,6 +183,83 @@ def interval_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Spark's default, FileContext-based manager shells out ``readlink`` on
+# every rename when the Hadoop native libs are absent; this one renames
+# in-process
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _leaf_bytes(spark: SparkSession, leaf) -> int | None:
+    """Bytes of the files under a streaming leaf's ``path`` option,
+    symlinks followed, or None when there is no local path to stat."""
+    node = leaf.nodeName()
+    if node == "StreamingRelation":  # DSv1 file sources
+        path = leaf.dataSource().options().get("path").getOrElse(None)
+    elif node == "StreamingRelationV2":  # DSv2 and Python data sources
+        path = leaf.extraOptions().get("path")
+    else:
+        return None
+    if path is None:
+        return None
+    url = urlparse(path)
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    if (url.scheme or urlparse(default_fs).scheme) != "file":
+        return None
+    if os.path.isfile(url.path):
+        return os.path.getsize(url.path)
+    if not os.path.isdir(url.path):
+        return None
+    walk = os.walk(url.path, followlinks=True)
+    try:
+        return sum(os.path.getsize(os.path.join(d, f)) for d, _, files in walk for f in files)
+    except OSError:  # a dangling link: size unknown
+        return None
+
+
+def _state_partitions(df: DataFrame) -> int:
+    """Shuffle (hence state store) partitions for one run of ``df``:
+    the input's bytes over ``spark.sql.files.maxPartitionBytes``
+    (Spark's scan split rule, as sources/raster.py sizes tiles),
+    capped by the session's ``spark.sql.shuffle.partitions``. Any
+    streaming leaf whose size cannot be read keeps the session value.
+    Leaves come from the ANALYZED plan: the logical plan still shows a
+    Python data source as an unresolved relation."""
+    spark = df.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    cap = conf.numShufflePartitions()
+    total = 0
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if not leaf.isStreaming():
+            continue
+        n = _leaf_bytes(spark, leaf)
+        if n is None:
+            return cap
+        total += n
+    return max(1, min(cap, -(-total // conf.filesMaxPartitionBytes())))
+
+
+@contextmanager
+def _pinned_confs(spark: SparkSession, pins: dict[str, str]):
+    """Set ``pins`` on the session for the block, then put every key
+    back as it was (an unset key is unset again)."""
+    before = {k: spark.conf.get(k, None) for k in pins}
+    for k, v in pins.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_stream_to_memory(
     df: DataFrame, name: str, timeout_sec: int = 120, output_mode: str = "complete"
 ):
@@ -198,26 +277,29 @@ def run_stream_to_memory(
     micro-batch (a stream-stream join keeps FOUR stores per
     partition), and the partition count is frozen into the checkpoint
     at first batch. The session's batch-oriented shuffle.partitions
-    (32 here, thousands on a real cluster) buys nothing for state
-    volumes this size while paying store open/commit/close per
-    partition per batch — measured 6.5 s -> 2.5 s on the interval
-    join at sf0.1. Each run starts from a fresh checkpoint, so
-    bounding the conf just for the .start() window is safe; size it
-    to expected state volume via SPARK_GRAFT_STREAM_PARTITIONS on a
-    cluster."""
+    buys nothing for state that a scan of the input would not split,
+    while paying store open/commit/close per partition per batch, so
+    each run sizes it from the input (``_state_partitions``). Each run
+    starts from a fresh checkpoint, so setting the conf just for the
+    run is safe. Without ``spark.sql.streaming.checkpointLocation`` the
+    checkpoint is a throwaway local temp dir, written through the
+    FileSystem checkpoint manager."""
     spark = df.sparkSession
-    n_state = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_state)
-    # Watermark-gated emission (outer-join NULL pads, final windows)
-    # is only flushed by the trailing NO-DATA micro-batch: the
-    # single-file source delivers everything in batch 1, so the
-    # watermark that closes state advances only in a batch with no new
-    # data. Pin the conf (default true) rather than depend on it
-    # silently — with it off, q154's unmatched clicks would vanish.
-    before_ndm = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
+    pins = {
+        "spark.sql.shuffle.partitions": str(_state_partitions(df)),
+        # Watermark-gated emission (outer-join NULL pads, final windows)
+        # is only flushed by the trailing NO-DATA micro-batch: the
+        # single-file source delivers everything in batch 1, so the
+        # watermark that closes state advances only in a batch with no
+        # new data. Pin the conf (default true) rather than depend on
+        # it silently — with it off, q154's unmatched clicks would vanish.
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+    }
+    if spark.conf.get("spark.sql.streaming.checkpointLocation", None) is None:
+        pins["spark.sql.streaming.checkpointFileManagerClass"] = _FS_CHECKPOINT_MANAGER
+    # micro-batches plan asynchronously after .start(), so the pins
+    # stay in force until the query terminates
+    with _pinned_confs(spark, pins):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -226,15 +308,9 @@ def run_stream_to_memory(
             .start()
         )
         finished = q.awaitTermination(timeout_sec)
-    finally:
-        # micro-batches plan asynchronously after .start(), so the
-        # bounded conf must stay in force until the query terminates
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", before_ndm
-        )
+        if not finished:
+            q.stop()
     if not finished:
-        q.stop()
         raise TimeoutError(
             f"streaming query {name!r} did not finish within {timeout_sec}s; "
             "memory sink contents would be partial"

@@ -36,6 +36,7 @@ from sklearn_raster_spark.utils.sqltext import sql_ident, sql_literal
 from sklearn_raster_spark.utils.threads import limit_inner_threads
 
 MASK_COL = "__srs_nodata_mask__"  # the row's NoData flag, read by the kernel
+NAN_FLAG = "__srs_isnan_{}__"  # carried float column i held NaN
 
 def align_feature_frames(ffs: "list[FeatureFrame]", on: "list[str]") -> FeatureFrame:
     """Multi-input alignment (reference O11/O12, ufunc/_meta.py:263-285):
@@ -166,12 +167,23 @@ class FeaturewiseUfunc:
                 )
         features = list(ff.features)
         keep_cols = df.columns if keep_features else list(ff.passthrough)
-        if skip_nodata:
-            if MASK_COL in df.columns:
-                raise ValueError(f"column name {MASK_COL!r} is reserved for the NoData mask")
-            df = df.withColumn(MASK_COL, ff.nodata_mask())
-            keep_cols = keep_cols + [MASK_COL]
         in_dtypes = dict(df.dtypes)
+        # a JVM isnan flag rides beside each carried float column, so the
+        # last projection can restore a NaN that Arrow brought back as NULL
+        nan_flags = {
+            c: NAN_FLAG.format(i)
+            for i, c in enumerate(keep_cols)
+            if in_dtypes[c] in ("float", "double")
+        }
+        helpers = {MASK_COL: ff.nodata_mask()} if skip_nodata else {}
+        helpers.update({f: F.isnan(F.col(sql_ident(c))) for c, f in nan_flags.items()})
+        taken = sorted(set(helpers) & set(df.columns))
+        if taken:
+            raise ValueError(f"column names {taken} are reserved for the kernel's row flags")
+        if helpers:
+            df = df.withColumns(helpers)
+            keep_cols = keep_cols + list(helpers)
+            in_dtypes.update(dict.fromkeys(helpers, "boolean"))
         schema = ", ".join(
             [f"{sql_ident(c)} {in_dtypes[c]}" for c in keep_cols]
             + [f"{sql_ident(n)} {o.dtype}" for o in self.outputs for n in o.names]
@@ -237,15 +249,21 @@ class FeaturewiseUfunc:
                     yield out
 
         result = df.mapInPandas(kernel, schema=schema)
-        if skip_nodata:
-            # written in the JVM: through Arrow, a NaN encoding that pandas
-            # wrote would come back as NULL
-            result = result.withColumns({
-                n: F.when(F.col(MASK_COL), F.lit(o.resolved_nodata()).cast(o.dtype))
-                .otherwise(F.col(sql_ident(n)))
-                for o in outputs
-                for n in o.names
-            }).drop(MASK_COL)
+        # nodata and NaN are written in the JVM: through Arrow, a NaN that
+        # pandas wrote would come back as NULL
+        restore = {
+            n: F.when(F.col(MASK_COL), F.lit(o.resolved_nodata()).cast(o.dtype))
+            .otherwise(F.col(sql_ident(n)))
+            for o in outputs
+            for n in o.names
+        } if skip_nodata else {}
+        restore.update({
+            c: F.when(F.col(f), F.lit(float("nan")).cast(in_dtypes[c]))
+            .otherwise(F.col(sql_ident(c)))
+            for c, f in nan_flags.items()
+        })
+        if helpers:
+            result = result.withColumns(restore).drop(*helpers)
 
         out_ff = FeatureFrame(
             df=result,

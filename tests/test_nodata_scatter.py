@@ -193,3 +193,31 @@ def test_skip_nodata_false_scores_every_row(spark):
     )
     assert out.df.columns == ["id", "y"]
     assert sorted((r["id"], r["y"]) for r in out.df.collect()) == [(0, 2.0), (1, 1.0)]
+
+
+def test_carried_float_nan_survives_arrow(spark):
+    """A NaN in a carried float column (a passthrough, or a feature
+    under ``keep_features``) comes back NaN on valid and masked rows,
+    not NULL; a NULL stays NULL and the row flags are dropped."""
+    df = spark.range(3).selectExpr(
+        "id",
+        "IF(id = 1, double('NaN'), double(id)) AS a",
+        "IF(id = 2, NULL, double('NaN')) AS p",
+        "float('NaN') AS f",
+    )
+    ff = FeatureFrame.from_dataframe(df, ["a"])
+    uf = FeaturewiseUfunc(lambda X: X[:, 0] + 1, [Output(("y",), "double")])
+
+    def nan(v):
+        return v is not None and math.isnan(v)
+
+    for keep in (False, True):
+        out = uf(ff, keep_features=keep).df
+        assert out.columns == (["id", "a", "p", "f", "y"] if keep else ["id", "p", "f", "y"])
+        rows = {r["id"]: r for r in out.collect()}
+        assert [nan(rows[i]["p"]) for i in range(3)] == [True, True, False]
+        assert rows[2]["p"] is None
+        assert all(nan(rows[i]["f"]) for i in range(3))
+        assert (rows[0]["y"], nan(rows[1]["y"]), rows[2]["y"]) == (1.0, True, 3.0)
+        if keep:
+            assert (rows[0]["a"], nan(rows[1]["a"]), rows[2]["a"]) == (0.0, True, 2.0)

@@ -1,6 +1,8 @@
 """Streaming correctness: each stream's availableNow run must equal its
 batch dual (which is itself oracle-checked against DuckDB)."""
 
+import pytest
+
 from sklearn_raster_spark.operators.events import q26_tumbling_window
 from sklearn_raster_spark.streaming import (
     run_stream_to_memory,
@@ -187,3 +189,75 @@ def test_foreach_batch_parquet_sink(spark, sf_dir, tmp_path):
         .collect()
     )
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+# -- per-run confs: state partitions sized from the input ---------------
+
+_PINNED = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointFileManagerClass",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def _confs(spark):
+    return {k: spark.conf.get(k, None) for k in _PINNED}
+
+
+def test_state_partitions_follow_input_bytes(spark, sf_dir):
+    """The sf0.001 events file is far below one scan split, so the
+    stateful run keeps one state partition, not the session's count."""
+    q = run_stream_to_memory(tumbling_counts_stream(spark, sf_dir), "sized_state")
+    q.stop()
+    parts = {so["numShufflePartitions"] for p in q.recentProgress for so in p["stateOperators"]}
+    assert parts == {1}
+
+
+def test_unsized_source_keeps_session_partitions(spark):
+    """A source with no path to stat (``rate``) resolves to the
+    session's shuffle partitions; planned only, never run."""
+    from sklearn_raster_spark.streaming import _state_partitions
+
+    df = spark.readStream.format("rate").load().groupBy("value").count()
+    assert _state_partitions(df) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def test_stream_run_restores_confs(spark, sf_dir, monkeypatch):
+    """Each pin holds while the query runs and is put back after it,
+    including an unset checkpoint manager and the timeout path."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    ndm = _PINNED[2]
+    assert spark.conf.get(_PINNED[1], None) is None
+    before = _confs(spark)
+    before_ndm = before[ndm]
+    q = run_stream_to_memory(tumbling_counts_stream(spark, sf_dir), "restore_ok")
+    q.stop()
+    assert _confs(spark) == before
+
+    seen = {}
+
+    def timed_out(self, timeout=None):
+        seen.update(_confs(spark))
+        return False
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", timed_out)
+    spark.conf.set(ndm, "false")
+    try:
+        before = _confs(spark)
+        with pytest.raises(TimeoutError):
+            run_stream_to_memory(tumbling_counts_stream(spark, sf_dir), "restore_timeout")
+        assert _confs(spark) == before
+    finally:
+        if before_ndm is None:
+            spark.conf.unset(ndm)
+        else:
+            spark.conf.set(ndm, before_ndm)
+    assert seen == {
+        "spark.sql.shuffle.partitions": "1",
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+    }
