@@ -4,7 +4,7 @@ FeatureFrame, distributed.
 Reference parity: src/sklearn_raster/estimator.py wraps an estimator so
 predict / predict_proba / transform / inverse_transform / kneighbors
 run batch-wise over an n-d array with NoData handling. Here the batch
-engine is ``FeaturewiseUfunc`` (mapInPandas) and the model ships to
+engine is ``FeaturewiseUfunc`` (mapInArrow) and the model ships to
 executors via ``SparkContext.broadcast`` once, not per task.
 
 The wrapped estimator is duck-typed (fit/predict/...); no sklearn

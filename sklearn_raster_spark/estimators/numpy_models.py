@@ -197,7 +197,7 @@ class FixedGaussianNB:
     """Gaussian naive Bayes with KNOWN parameters (no data-dependent
     fit) — the classifier analog of ``FixedLinearModel``.
 
-    Exists so the q41/q42 mapInPandas inference paths (broadcast model
+    Exists so the q41/q42 mapInArrow inference paths (broadcast model
     + Arrow kernel) have hash-exact SQL oracles: the joint
     log-likelihood is evaluated with the SAME sequential elementwise
     IEEE order as the oracle expression (``const_k - d*d*iv`` summed
@@ -261,7 +261,7 @@ class FixedGaussianNB:
 class FixedPCA:
     """A fixed affine projection (no data-dependent fit) — the
     transform analog of ``FixedLinearModel``, giving the q43
-    mapInPandas transform path an exact SQL oracle. ``transform``
+    mapInArrow transform path an exact SQL oracle. ``transform``
     accumulates ``(x_d - mean_d) * W[j, d]`` left-to-right per
     component (no matmul/BLAS reassociation), matching the oracle's
     `+`-chain bit for bit."""
@@ -298,7 +298,7 @@ class FixedKNeighbors:
     surface ``/root/reference/src/sklearn_raster/estimator.py:345-518``).
 
     Exists so the q44 kneighbors path (broadcast fit set + Arrow
-    mapInPandas brute force through ``SparkEstimator.kneighbors``) has
+    mapInArrow brute force through ``SparkEstimator.kneighbors``) has
     a hash-exact SQL oracle: with dyadic fit coordinates every
     ``(x - f)`` is a correctly-rounded double op, the per-point
     distance accumulates left-to-right in the SAME IEEE order as the

@@ -42,7 +42,7 @@ EMB_DIM = 64
         END AS score
     FROM lineitem
     """,
-    doc="Distributed mapInPandas inference with reference NoData "
+    doc="Distributed mapInArrow inference with reference NoData "
         "semantics: l_quantity=50 is an encoded NoData sentinel "
         "(nullified at ingestion, O2), masked rows skip the model (O4) "
         "and scatter back nodata_output=-9999 (O5). Fixed weights give "
@@ -62,7 +62,7 @@ def q40_linear_inference_nodata(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = SparkEstimator(model)
     est.fit(pd.DataFrame(np.zeros((2, 3)), columns=["l_quantity", "l_discount", "l_tax"]))
     est.target_names_in_ = ("score",)
-    # deliberately the Arrow/mapInPandas path — q48 is the compiled dual
+    # deliberately the Arrow/mapInArrow path — q48 is the compiled dual
     out = est.predict(ff, nodata_output=-9999.0, compile_expressions=False)
     return out.df.select("l_orderkey", "l_linenumber", "score")
 
@@ -156,7 +156,7 @@ def _collect_embeddings(spark: SparkSession, sf_dir: str, cap: int = FIT_SAMPLE_
     "q41_nb_classify_embeddings",
     doc="Fit Gaussian NB driver-side on the embeddings table (the "
         "reference fits on small plot tables, estimator.py:81-115), "
-        "classify distributed via broadcast model + mapInPandas. "
+        "classify distributed via broadcast model + mapInArrow. "
         "Rows-only check (fitted model state is not SQL).",
 )
 def q41_nb_classify_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,7 +273,7 @@ def q43_pca_transform_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q41/q42/q43 run fitted models (SVD components, class statistics) whose
 # parameters are not SQL-expressible, so they are rows-only. q171/q172/
 # q173 drive the SAME distributed execution paths (broadcast model +
-# Arrow mapInPandas kernel through SparkEstimator E3/E4/E6) with FIXED
+# Arrow mapInArrow kernel through SparkEstimator E3/E4/E6) with FIXED
 # literal parameters, giving each path a hash-exact DuckDB oracle —
 # exactly how q48 twins q40's linear inference, and the Spark analog of
 # the reference's bare-estimator differential oracle
@@ -366,7 +366,7 @@ def _fixed_nb_estimator() -> SparkEstimator:
     FROM s
     """,
     doc="Portable twin of q41 (E3 classify through the broadcast-model "
-        "Arrow mapInPandas path): FIXED-parameter Gaussian NB, scores "
+        "Arrow mapInArrow path): FIXED-parameter Gaussian NB, scores "
         "accumulated in the oracle's exact IEEE order, first-max "
         "argmax matching the CASE ladder — the fitted-state query's "
         "execution path, hash-graded.",
@@ -436,7 +436,7 @@ def _pca_component_sql(j: int) -> str:
     WHERE {_FINITE_SQL}
     """,
     doc="Portable twin of q43 (E6 transform through the Arrow "
-        "mapInPandas path, output names from get_feature_names_out): "
+        "mapInArrow path, output names from get_feature_names_out): "
         "FIXED affine projection accumulated left-to-right per "
         "component — bit-identical to the oracle's `+` chain, no "
         "matmul reassociation. Hash-graded.",
@@ -518,7 +518,7 @@ def _knn_oracle() -> str:
     "q176_kneighbors_portable",
     oracle=_knn_oracle(),
     doc="Portable twin of q44 (E5 kneighbors through the broadcast "
-        "fit-set Arrow mapInPandas brute-force path): FIXED 6-point "
+        "fit-set Arrow mapInArrow brute-force path): FIXED 6-point "
         "dyadic fit set, SQUARED distances accumulated left-to-right "
         "per fit point (bit-identical to the oracle's `+` chain — "
         "emitting d^2 instead of d removes sqrt, the only op in the "

@@ -5,8 +5,9 @@ but degrade gracefully on local[N]:
 
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting, and
   dynamic join-strategy demotion replace hand-tuned partition counts.
-- Arrow on: every Python-boundary crossing (mapInPandas / pandas_udf /
-  createDataFrame) is vectorized batch transfer, never per-row pickling.
+- Arrow on: every Python-boundary crossing (mapInArrow / mapInPandas /
+  pandas_udf / createDataFrame) is vectorized batch transfer, never
+  per-row pickling.
 - Partial aggregation, predicate pushdown, column pruning are Catalyst
   defaults — we only have to not defeat them (no opaque UDFs in filters).
 

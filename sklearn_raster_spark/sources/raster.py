@@ -8,7 +8,7 @@ one per spatial chunk with every band present. The Spark dual reads
 the same way:
 
     spark.range(T, numPartitions=T)      -- one row per tile, driver-built
-      -> mapInPandas(tile decode)        -- task t reads rows [y0, y1)
+      -> mapInArrow(tile decode)         -- task t reads rows [y0, y1)
                                             of EVERY band file
       -> long  (band, y, x, value)       -- read_raster_stack
       -> wide  (y, x, "0".."n-1")        -- raster_stack_to_wide, no shuffle
@@ -48,7 +48,7 @@ import os
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -107,7 +107,7 @@ def _decode_grid(path: str) -> np.ndarray:
     (datasets/_base.py:71-104), band 1 of the file — and otherwise via
     the builtin baseline-TIFF codec (sources/tiff.py), so the GeoTIFF
     branch EXECUTES everywhere; only compressed/tiled exotics still
-    need rasterio. Runs on EXECUTORS inside mapInPandas."""
+    need rasterio. Runs on EXECUTORS inside mapInArrow."""
     if path.endswith((".tif", ".tiff")):
         import importlib.util
 
@@ -169,14 +169,12 @@ def _open_band(path: str) -> np.ndarray:
     return grid
 
 
-def _nullable(vals: np.ndarray) -> pd.arrays.FloatingArray:
-    """NaN cells surface as SQL NULL, EXPLICITLY, via the masked
-    nullable-float array: NaN is the raster world's canonical float
-    nodata (a MISSING cell, reference features.py NoData semantics),
-    and relying on Arrow's implicit pandas nan_as_null default would
-    leave the contract to a library setting. +-Inf are real (if
+def _nullable(vals: np.ndarray) -> pa.Array:
+    """NaN cells surface as SQL NULL through an explicit Arrow validity
+    mask: NaN is the raster world's canonical float nodata (a MISSING
+    cell, reference features.py NoData semantics). +-Inf are real (if
     degenerate) cell VALUES and pass through."""
-    return pd.arrays.FloatingArray(vals, np.isnan(vals))
+    return pa.array(vals, mask=np.isnan(vals))
 
 
 def _decode_tiles(files, n_tiles: int, tiles) -> Iterator[tuple]:
@@ -194,11 +192,11 @@ def _decode_tiles(files, n_tiles: int, tiles) -> Iterator[tuple]:
 
 
 def _tile_scan(spark: SparkSession, files, emit, schema: StructType) -> DataFrame:
-    """``spark.range(T, numPartitions=T).mapInPandas``: task t decodes
-    tile t of every band and hands its rows to ``emit``. T is the
-    stack's bytes over ``spark.sql.files.maxPartitionBytes``, Spark's
-    own scan split size; the driver stats the files and decodes
-    nothing."""
+    """``spark.range(T, numPartitions=T).mapInArrow``: task t decodes
+    tile t of every band and hands its rows to ``emit``, whose column
+    dicts become the task's record batches. T is the stack's bytes
+    over ``spark.sql.files.maxPartitionBytes``, Spark's own scan split
+    size; the driver stats the files and decodes nothing."""
     from sklearn_raster_spark.session import ensure_workers_can_import
 
     ensure_workers_can_import(spark)  # the UDF pickles this module by reference
@@ -210,26 +208,24 @@ def _tile_scan(spark: SparkSession, files, emit, schema: StructType) -> DataFram
     split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     n_tiles = max(1, -(-sum(os.path.getsize(p) for _, p in files) // split))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for y0, y1, blocks in _decode_tiles(files, n_tiles, pdf["id"]):
-                yield from emit(y0, y1, blocks)
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for y0, y1, blocks in _decode_tiles(files, n_tiles, batch.column("id").to_numpy()):
+                yield from map(pa.RecordBatch.from_pydict, emit(y0, y1, blocks))
 
-    return spark.range(n_tiles, numPartitions=n_tiles).mapInPandas(decode, schema)
+    return spark.range(n_tiles, numPartitions=n_tiles).mapInArrow(decode, schema)
 
 
-def _emit_long(y0: int, y1: int, blocks) -> Iterator[pd.DataFrame]:
+def _emit_long(y0: int, y1: int, blocks) -> Iterator[dict]:
     for band, rows in blocks:
         h, w = rows.shape
         if rows.size:
-            yield pd.DataFrame(
-                {
-                    "band": np.full(rows.size, band, dtype=np.int32),
-                    "y": np.repeat(np.arange(y0, y0 + h, dtype=np.int32), w),
-                    "x": np.tile(np.arange(w, dtype=np.int32), h),
-                    "value": _nullable(rows.ravel()),
-                }
-            )
+            yield {
+                "band": np.full(rows.size, band, dtype=np.int32),
+                "y": np.repeat(np.arange(y0, y0 + h, dtype=np.int32), w),
+                "x": np.tile(np.arange(w, dtype=np.int32), h),
+                "value": _nullable(rows.ravel()),
+            }
 
 
 def read_raster_stack(spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
@@ -249,7 +245,7 @@ def _read_raster_wide(
     """Wide-form scan (y, x, "0".."n_bands-1") straight from the files,
     equal to the pivot of read_raster_stack's rows."""
 
-    def emit(y0: int, y1: int, blocks) -> Iterator[pd.DataFrame]:
+    def emit(y0: int, y1: int, blocks) -> Iterator[dict]:
         # the union of the grids: row y spans the widest grid reaching it
         row_w = np.zeros(y1 - y0, dtype=np.int64)
         for _, rows in blocks:
@@ -270,7 +266,7 @@ def _read_raster_wide(
                     grid[: rows.shape[0], : rows.shape[1]] = rows
                 rows = grid
             out[str(b)] = _nullable(rows.ravel()[cells])
-        yield pd.DataFrame(out)
+        yield out
 
     schema = StructType(
         [StructField("y", IntegerType()), StructField("x", IntegerType())]

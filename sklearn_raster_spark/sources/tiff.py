@@ -30,7 +30,7 @@ Scope, deliberately narrow:
   source falls back to rasterio automatically when the environment
   provides it.
 
-Decode runs on EXECUTORS inside the raster source's mapInPandas, so
+Decode runs on EXECUTORS inside the raster source's mapInArrow, so
 it allocates only the one grid it returns — no driver involvement.
 """
 

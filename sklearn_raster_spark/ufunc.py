@@ -5,19 +5,24 @@ Reference parity: src/sklearn_raster/ufunc/_base.py:141-268 orchestrates
 chunk, with NoData skip/scatter-back and declared output metadata". The
 Spark-native translation (SURVEY.md O1-O15):
 
-- chunk            -> Arrow batch inside ONE ``mapInPandas`` over all rows
-- declared outputs -> the ``returnType`` StructType (Spark, like the
-                      reference, needs output schema before execution)
+- chunk            -> Arrow record batch inside ONE ``mapInArrow`` over
+                      all rows
+- declared outputs -> the output StructType (Spark, like the reference,
+                      needs output schema before execution)
 - skip-NoData      -> the row mask is evaluated once in the JVM and rides
                       into the batch as a boolean column; ``func`` sees
                       only the batch's valid rows (none: no call)
-- scatter-back     -> valid outputs go back in place; one JVM projection
-                      writes each output's ``nodata`` where the mask is
-                      set. The input lineage is read once; masked rows
-                      cross the Python boundary, but never reach ``func``
-- ensure_min_samples -> per-batch pandas padding inside the UDF (not
+- scatter-back     -> the kernel fills each output with its ``nodata``
+                      and writes the valid rows' results in place. The
+                      input lineage is read once; masked rows cross the
+                      Python boundary, but never reach ``func``
+- ensure_min_samples -> per-batch numpy padding inside the kernel (not
                       expressible relationally; reference
                       ufunc/_base.py:366-382)
+
+Outputs leave the kernel as Arrow arrays built from numpy, so a NaN
+(written as nodata or returned by ``func``) stays NaN, and carried
+columns are the input batch's own Arrow arrays.
 """
 
 from __future__ import annotations
@@ -26,17 +31,15 @@ from dataclasses import dataclass
 from typing import Any, Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import functions as F
+import pyarrow as pa
 
 from sklearn_raster_spark.features import FeatureFrame
 from sklearn_raster_spark.utils.casting import default_nodata_for, validate_nodata
-from sklearn_raster_spark.utils.sqltext import sql_ident, sql_literal
+from sklearn_raster_spark.utils.sqltext import sql_ident
 from sklearn_raster_spark.utils.threads import limit_inner_threads
 
 MASK_COL = "__srs_nodata_mask__"  # the row's NoData flag, read by the kernel
-NAN_FLAG = "__srs_isnan_{}__"  # carried float column i held NaN
+
 
 def align_feature_frames(ffs: "list[FeatureFrame]", on: "list[str]") -> FeatureFrame:
     """Multi-input alignment (reference O11/O12, ufunc/_meta.py:263-285):
@@ -61,34 +64,6 @@ def align_feature_frames(ffs: "list[FeatureFrame]", on: "list[str]") -> FeatureF
     for ff in ffs:
         md.update(ff.metadata)
     return FeatureFrame(df=joined, features=tuple(all_feats), nodata_input={}, metadata=md)
-
-
-def count_output_collisions(ff: FeatureFrame, nodata_output) -> int:
-    """Reference O8 (ufunc/_base.py:453-466): count rows where a
-    *valid* output legitimately equals the NoData encoding — the caller
-    can warn that those rows will be indistinguishable after encoding.
-    Eager (one count job); call only when the check matters.
-
-    Must run BEFORE ``nodata_output`` is encoded into the frame: once a
-    feature's registered NoData equals the tested value, masked rows
-    and colliding valid rows are the same bit pattern and no post-hoc
-    count can separate them (that in-flight distinction is what the
-    kernel-side accumulator in FeaturewiseUfunc provides) — raise on
-    that ambiguous call instead of silently counting masked rows."""
-    ambiguous = [
-        n for n in ff.features if ff.nodata_input.get(n) == nodata_output
-    ]
-    if ambiguous:
-        raise ValueError(
-            f"features {ambiguous} already register {nodata_output!r} as "
-            "their NoData encoding — masked rows are indistinguishable "
-            "from colliding valid rows here; use the kernel-side "
-            "collision accumulator (warn_if_output_collisions) instead"
-        )
-    if not ff.features:
-        return 0
-    hit = sql_literal(nodata_output)
-    return ff.df.filter(" OR ".join(f"{sql_ident(n)} = {hit}" for n in ff.features)).count()
 
 
 _NP_DTYPE = {
@@ -168,22 +143,13 @@ class FeaturewiseUfunc:
         features = list(ff.features)
         keep_cols = df.columns if keep_features else list(ff.passthrough)
         in_dtypes = dict(df.dtypes)
-        # a JVM isnan flag rides beside each carried float column, so the
-        # last projection can restore a NaN that Arrow brought back as NULL
-        nan_flags = {
-            c: NAN_FLAG.format(i)
-            for i, c in enumerate(keep_cols)
-            if in_dtypes[c] in ("float", "double")
-        }
-        helpers = {MASK_COL: ff.nodata_mask()} if skip_nodata else {}
-        helpers.update({f: F.isnan(F.col(sql_ident(c))) for c, f in nan_flags.items()})
-        taken = sorted(set(helpers) & set(df.columns))
-        if taken:
-            raise ValueError(f"column names {taken} are reserved for the kernel's row flags")
-        if helpers:
-            df = df.withColumns(helpers)
-            keep_cols = keep_cols + list(helpers)
-            in_dtypes.update(dict.fromkeys(helpers, "boolean"))
+        clash = sorted(set(keep_cols) & {n for o in self.outputs for n in o.names})
+        if clash:
+            raise ValueError(f"output names {clash} are already carried columns")
+        if skip_nodata:
+            if MASK_COL in in_dtypes:
+                raise ValueError(f"column name {MASK_COL!r} is reserved for the kernel's row mask")
+            df = df.withColumn(MASK_COL, ff.nodata_mask())
         schema = ", ".join(
             [f"{sql_ident(c)} {in_dtypes[c]}" for c in keep_cols]
             + [f"{sql_ident(n)} {o.dtype}" for o in self.outputs for n in o.names]
@@ -197,11 +163,9 @@ class FeaturewiseUfunc:
         # legitimately equal the NoData encoding (indistinguishable from
         # masked rows downstream). NaN encodings can't collide with valid
         # values by definition and are skipped.
+        out_nodata = [o.resolved_nodata() for o in outputs]
         out_collision_vals = [
-            None
-            if (isinstance(nd := o.resolved_nodata(), float) and np.isnan(nd))
-            else nd
-            for o in outputs
+            None if isinstance(nd, float) and np.isnan(nd) else nd for nd in out_nodata
         ]
 
         def score(X: np.ndarray) -> list[np.ndarray]:
@@ -227,44 +191,35 @@ class FeaturewiseUfunc:
                 collision_counter.add(sum(int((a == c).sum()) for a, c in pairs if c is not None))
             return arrs
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             with limit_inner_threads(inner_thread_limit):
-                for pdf in batches:
-                    if pdf.empty:
+                for batch in batches:
+                    n = batch.num_rows
+                    if not n:
                         continue
-                    out = pdf[keep_cols].copy() if keep_cols else pd.DataFrame(index=pdf.index)
-                    valid = ~pdf[MASK_COL].to_numpy(dtype=bool) if skip_nodata else slice(None)
-                    # rows picked in pandas: the matrix keeps the column-major
-                    # layout a whole batch has (a BLAS result can differ by it)
-                    X = pdf.loc[valid, features].to_numpy(dtype=np.float64, na_value=np.nan)
-                    # a batch with no valid row never reaches func; masked
-                    # rows carry a placeholder the nodata projection replaces
+                    valid = (
+                        ~batch.column(MASK_COL).to_numpy(zero_copy_only=False)
+                        if skip_nodata
+                        else np.ones(n, dtype=bool)
+                    )
+                    # X is column-major: a BLAS result can differ by layout,
+                    # and the 1e-9 estimator checks pin this one. NULL is NaN;
+                    # a bigint past 2**53 rounds, as numpy's astype does
+                    X = np.empty((len(features), np.count_nonzero(valid))).T
+                    for j, f in enumerate(features):
+                        col = batch.column(f).cast(pa.float64(), safe=False)
+                        np.compress(valid, col.to_numpy(zero_copy_only=False), out=X[:, j])
+                    # a batch with no valid row never reaches func
                     res = score(X) if len(X) else [None] * len(outputs)
-                    for arr, names, npdt in zip(res, out_names, out_np):
-                        full = np.zeros((len(pdf), len(names)), dtype=npdt)
+                    cols = {c: batch.column(c) for c in keep_cols}
+                    for arr, names, npdt, nd in zip(res, out_names, out_np, out_nodata):
+                        full = np.full((len(names), n), nd, dtype=npdt)
                         if arr is not None:
-                            full[valid] = arr
-                        for j, name in enumerate(names):
-                            out[name] = full[:, j]
-                    yield out
+                            full[:, valid] = arr.T
+                        cols.update(zip(names, map(pa.array, full)))
+                    yield pa.RecordBatch.from_pydict(cols)
 
-        result = df.mapInPandas(kernel, schema=schema)
-        # nodata and NaN are written in the JVM: through Arrow, a NaN that
-        # pandas wrote would come back as NULL
-        restore = {
-            n: F.when(F.col(MASK_COL), F.lit(o.resolved_nodata()).cast(o.dtype))
-            .otherwise(F.col(sql_ident(n)))
-            for o in outputs
-            for n in o.names
-        } if skip_nodata else {}
-        restore.update({
-            c: F.when(F.col(f), F.lit(float("nan")).cast(in_dtypes[c]))
-            .otherwise(F.col(sql_ident(c)))
-            for c, f in nan_flags.items()
-        })
-        if helpers:
-            result = result.withColumns(restore).drop(*helpers)
-
+        result = df.mapInArrow(kernel, schema=schema)
         out_ff = FeatureFrame(
             df=result,
             features=tuple(n for o in outputs for n in o.names),

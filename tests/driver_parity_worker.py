@@ -57,7 +57,7 @@ EXECUTE = {
     "q169_python_datasource",
     "q170_stream_python_datasource",
     # round-11: the portable fitted-state twins run the broadcast-model
-    # Arrow mapInPandas paths (pandas boundary), and q174 executes the
+    # Arrow mapInArrow paths (Python boundary), and q174 executes the
     # connector's permissive decode on executors
     "q171_nb_classify_portable",
     "q172_nb_proba_portable",
@@ -66,7 +66,7 @@ EXECUTE = {
     # ALS-ANN: toPandas fit sample + mapInPandas + cogrouped GEMM
     "q175_als_ann_recommendations",
     # round-12: the kneighbors twin runs the broadcast fit-set Arrow
-    # mapInPandas brute-force path (pandas boundary)
+    # mapInArrow brute-force path (Python boundary)
     "q176_kneighbors_portable",
 }
 

@@ -1,5 +1,5 @@
-"""Tests for multi-input ufunc alignment (O11/O12), collision counting
-(O8), the synthetic dataset generator (S4/S5), and parquet sinks (S6)."""
+"""Tests for multi-input ufunc alignment (O11/O12), the synthetic
+dataset generator (S4/S5), and parquet sinks (S6)."""
 
 import numpy as np
 import pandas as pd
@@ -10,12 +10,7 @@ from pyspark.sql import functions as F
 from sklearn_raster_spark.datasets import generate_fractal_noise, synthesize_feature_frame
 from sklearn_raster_spark.features import FeatureFrame
 from sklearn_raster_spark.sources import write_table
-from sklearn_raster_spark.ufunc import (
-    FeaturewiseUfunc,
-    Output,
-    align_feature_frames,
-    count_output_collisions,
-)
+from sklearn_raster_spark.ufunc import FeaturewiseUfunc, Output, align_feature_frames
 
 
 def test_multi_input_alignment_propagates_nodata(spark):
@@ -44,13 +39,6 @@ def test_duplicate_features_rejected(spark):
     ffa = FeatureFrame.from_dataframe(spark.createDataFrame(a), ["f1"])
     with pytest.raises(ValueError, match="duplicate feature"):
         align_feature_frames([ffa, ffa], on=["y", "x"])
-
-
-def test_collision_count(spark):
-    pdf = pd.DataFrame({"id": range(4), "v": [1.0, -9999.0, 3.0, -9999.0]})
-    ff = FeatureFrame.from_dataframe(spark.createDataFrame(pdf), ["v"])
-    assert count_output_collisions(ff, -9999.0) == 2
-    assert count_output_collisions(ff, 12345.0) == 0
 
 
 def test_fractal_noise_properties():

@@ -3,12 +3,13 @@
 ``FeatureFrame.nodata_mask`` is one parsed SQL string that must match
 the Column-built mask it replaced, row for row and expression for
 expression; ``FeaturewiseUfunc`` scores the valid rows of each Arrow
-batch and writes the nodata of masked rows in one JVM projection.
+batch and its kernel writes the nodata of masked rows in place.
 """
 
 import math
 import re
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -126,9 +127,8 @@ def test_all_masked_batch_never_calls_func(spark):
 
 
 def test_nodata_encodings_survive_arrow(spark):
-    """The NaN default comes back as NaN (not NULL, which Arrow makes
-    of a NaN written in pandas); int outputs carry int32 min or the
-    declared nodata."""
+    """The NaN default comes back as NaN, not NULL; int outputs carry
+    int32 min or the declared nodata."""
     ff = _frame(spark, [1.0, NAN, 3.0])
     uf = FeaturewiseUfunc(
         lambda X: (X[:, 0] * 2, X[:, 0].astype(int), X[:, 0].astype(int)),
@@ -186,6 +186,31 @@ def test_reserved_mask_column_raises(spark):
         FeaturewiseUfunc(lambda X: X[:, 0], [Output(("y",), "double")])(ff)
 
 
+def test_output_name_of_a_carried_column_raises(spark):
+    ff = _frame(spark, [1.0])
+    uf = FeaturewiseUfunc(lambda X: X[:, 0], [Output(("id",), "double")])
+    for keep in (False, True):
+        with pytest.raises(ValueError, match="already carried"):
+            uf(ff, keep_features=keep, skip_nodata=False)
+
+
+def test_frame_without_features_scores_an_empty_matrix(spark):
+    ff = FeatureFrame.from_dataframe(spark.range(2), [])
+    uf = FeaturewiseUfunc(lambda X: [X.shape[1]] * len(X), [Output(("k",), "int")])
+    assert sorted(tuple(r) for r in uf(ff).df.collect()) == [(0, 0), (1, 0)]
+
+
+def test_bigint_feature_past_2_53_rounds_like_numpy(spark):
+    """Features reach ``func`` as float64 the way numpy casts them: a
+    bigint that no double holds exactly rounds instead of raising."""
+    big = 2**53 + 1
+    df = spark.range(2).selectExpr("id", f"IF(id = 0, {big}L, NULL) AS a")
+    ff = FeatureFrame.from_dataframe(df, ["a"])
+    out = FeaturewiseUfunc(lambda X: X[:, 0], [Output(("y",), "double")])(ff)
+    rows = {r["id"]: r["y"] for r in out.df.collect()}
+    assert rows[0] == float(np.float64(big)) and math.isnan(rows[1])
+
+
 def test_skip_nodata_false_scores_every_row(spark):
     ff = _frame(spark, [1.0, NAN], nodata_input={"a": 1.0})
     out = FeaturewiseUfunc(lambda X: X[:, 0] + 1, [Output(("y",), "double")])(
@@ -198,7 +223,7 @@ def test_skip_nodata_false_scores_every_row(spark):
 def test_carried_float_nan_survives_arrow(spark):
     """A NaN in a carried float column (a passthrough, or a feature
     under ``keep_features``) comes back NaN on valid and masked rows,
-    not NULL; a NULL stays NULL and the row flags are dropped."""
+    not NULL; a NULL stays NULL and the row mask is not carried."""
     df = spark.range(3).selectExpr(
         "id",
         "IF(id = 1, double('NaN'), double(id)) AS a",
@@ -221,3 +246,41 @@ def test_carried_float_nan_survives_arrow(spark):
         assert (rows[0]["y"], nan(rows[1]["y"]), rows[2]["y"]) == (1.0, True, 3.0)
         if keep:
             assert (rows[0]["a"], nan(rows[1]["a"]), rows[2]["a"]) == (0.0, True, 2.0)
+
+
+@pytest.mark.parametrize("skip", [True, False])
+def test_func_nan_on_valid_row_stays_nan(spark, skip):
+    """A NaN that ``func`` returns for a valid row comes back NaN, the
+    same encoding a masked row carries: one output column holds one
+    encoding of "no value", never NULL."""
+    df = spark.range(4).selectExpr("id", "IF(id = 3, NULL, double(id)) AS a")
+    ff = FeatureFrame.from_dataframe(df, ["a"])
+    uf = FeaturewiseUfunc(
+        lambda X: np.where(X[:, 0] == 1, np.nan, X[:, 0]), [Output(("y",), "double")]
+    )
+    rows = {r["id"]: r["y"] for r in uf(ff, skip_nodata=skip).df.collect()}
+    assert None not in rows.values()
+    assert {i for i, y in rows.items() if math.isnan(y)} == ({1, 3} if skip else {1})
+    assert (rows[0], rows[2]) == (0.0, 2.0)
+
+
+@pytest.mark.parametrize("skip", [True, False])
+def test_carried_columns_pass_through_unchanged(spark, skip):
+    """Carried columns are the input batch's own Arrow arrays: every
+    type keeps its declared type and every value, NULL included, on
+    valid and masked rows alike."""
+    df = spark.range(4).selectExpr(
+        "id",
+        "IF(id = 2, NULL, double(id)) AS a",
+        "CAST(id * 1.125 - 1 AS DECIMAL(12,3)) AS dec",
+        "IF(id = 1, NULL, CONCAT('s', id)) AS s",
+        "TIMESTAMP'2024-03-10 01:30:00' + make_interval(0, 0, 0, 0, int(id)) AS ts",
+        "DATE'1969-12-30' + int(id) AS d",
+        "IF(id = 3, NULL, sequence(0L, id)) AS arr",
+        "IF(id = 0, NULL, id - 4) AS n",
+    )
+    ff = FeatureFrame.from_dataframe(df, ["a"])
+    uf = FeaturewiseUfunc(lambda X: X[:, 0] * 2, [Output(("y",), "double")])
+    out = uf(ff, keep_features=True, skip_nodata=skip).df
+    assert out.dtypes == df.dtypes + [("y", "double")]
+    assert sorted(out.drop("y").collect()) == sorted(df.collect())

@@ -172,7 +172,7 @@ def test_jvm_rolling_median_has_no_python(spark, sf_dir):
 
     plan = _plan(spark, sf_dir, "q148_rolling_median_jvm")
     for node in ("ArrowEvalPython", "BatchEvalPython", "ArrowWindowPython",
-                 "FlatMapGroupsInPandas", "MapInPandas"):
+                 "FlatMapGroupsInPandas", "MapInPandas", "MapInArrow"):
         assert node not in plan, node
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     udwf_plan = _plan(spark, sf_dir, "q142_rolling_median_udwf")
@@ -204,7 +204,9 @@ def test_portable_fingerprint_joins_are_banded(spark, sf_dir):
 def test_arrow_predict_is_one_scan_one_map(spark, tmp_path):
     """Arrow-path predict with NoData skip/scatter plans ONE branch: the
     parquet input is scanned once and crosses the Python boundary in
-    one MapInPandas; no Union of a second, masked-row branch."""
+    one MapInArrow; no Union of a second, masked-row branch, and the
+    map is the plan's top node (the kernel writes each output's
+    nodata, so no projection runs above it)."""
     import re
 
     import numpy as np
@@ -231,6 +233,7 @@ def test_arrow_predict_is_one_scan_one_map(spark, tmp_path):
     plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     nodes = re.findall(r"^\(\d+\) (\w+)", plan, flags=re.M)
     assert nodes.count("Scan") == 1, plan
-    assert nodes.count("MapInPandas") == 1, plan
+    assert nodes.count("MapInArrow") == 1, plan
+    assert plan.splitlines()[1].startswith("MapInArrow ("), plan  # the tree's root
     assert "Union" not in nodes, plan
     assert df.filter(F.isnan("y")).count() == 6
