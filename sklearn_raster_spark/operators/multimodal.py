@@ -1,7 +1,7 @@
 """Multimodal columns: opaque binary payloads + typed metadata, with
 decode / feature-extraction as Arrow-batched kernels (BASELINE.json
-north star; reuses the E3 skeleton — broadcast nothing, mapInPandas
-over binary columns).
+north star; reuses the E3 skeleton — broadcast nothing, one
+``mapInArrow`` row-map over binary columns, ``_row_map``).
 
 Since round 9 the decode step is REAL: ``decode_image`` reads
 PNG/BMP/PGM/PPM and ``decode_audio`` reads RIFF PCM WAV through the
@@ -22,16 +22,66 @@ maxRecordsPerBatch).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 from sklearn_raster_spark.plans.registry import query
 from sklearn_raster_spark.sources import read_table
+
+
+def _row_map(
+    df: DataFrame,
+    fn: Callable,
+    outputs: str,
+    inputs: Sequence[str],
+    keep: Sequence[str],
+    fan_out: bool = False,
+) -> DataFrame:
+    """The media kernels' one Arrow idiom: ``fn(*values)`` per row of
+    the ``inputs`` columns, through one ``df.mapInArrow``. ``fn``
+    returns one tuple of the ``outputs`` (a DDL string) per row, or
+    with ``fan_out`` a list of such tuples (one row -> 0..N rows). A
+    row with a NULL input never reaches ``fn``: it maps to NULL outputs
+    (no rows under ``fan_out``), the SQL rule (LENGTH(NULL) is NULL).
+    The ``keep`` columns ride along as the batch's own Arrow arrays;
+    each output is built as an Arrow array of its declared type, so
+    None is NULL for every type and a float NaN stays NaN."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from sklearn_raster_spark.session import ensure_workers_can_import
+
+    ensure_workers_can_import(df.sparkSession)
+    out_fields = DataType.fromDDL(outputs).fields
+    schema = StructType([StructField(c, df.schema[c].dataType) for c in keep] + out_fields)
+    names = schema.fieldNames()
+    types = [to_arrow_type(f.dataType) for f in out_fields]
+    nulls = [(None,) * len(types)]
+    k = len(keep)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            src, rows = [], []
+            values = zip(*(c.to_pylist() for c in batch.columns[k:]))
+            for i, vals in enumerate(values):
+                if any(v is None for v in vals):
+                    res = [] if fan_out else nulls
+                else:
+                    res = fn(*vals) if fan_out else [fn(*vals)]
+                src += [i] * len(res)
+                rows += res
+            if rows:
+                take = pa.array(src, pa.int64())
+                cols = [c.take(take) for c in batch.columns[:k]]
+                cols += [pa.array(col, t) for col, t in zip(zip(*rows), types)]
+                yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return df.select(*keep, *inputs).mapInArrow(kernel, schema)
 
 
 def decode_image(payload: bytes, mime: str | None = None):
@@ -75,59 +125,25 @@ def attach_binary_payload(docs: DataFrame) -> DataFrame:
 
 
 def extract_byte_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Feature-extraction kernel over binary payloads via mapInPandas:
-    byte length, mean byte value, distinct-byte count, a 4-bin byte
-    histogram. Deterministic; stands in for decode+embed."""
-    keep = [c for c in df.columns if c != payload_col]
-    in_dtypes = dict(df.dtypes)
-    schema = ", ".join(
-        [f"`{c}` {in_dtypes[c]}" for c in keep]
-        + [
-            "n_bytes int",
-            "n_spaces int",
-            "mean_byte double",
-            "n_distinct_bytes int",
-            "hist_0 int",
-            "hist_1 int",
-            "hist_2 int",
-            "hist_3 int",
-        ]
+    """Feature-extraction kernel over binary payloads (``_row_map``):
+    byte length, space count, mean byte value, distinct-byte count, a
+    4-bin byte histogram. Deterministic; stands in for decode+embed.
+    A NULL payload gives NULL features and the row survives."""
+
+    def features(payload: bytes) -> tuple:
+        arr = np.frombuffer(payload, dtype=np.uint8)
+        hist, _ = np.histogram(arr, bins=4, range=(0, 256))
+        mean = float(arr.mean()) if len(arr) else 0.0
+        return (len(arr), int((arr == 32).sum()), mean, len(np.unique(arr)), *map(int, hist))
+
+    return _row_map(
+        df,
+        features,
+        "n_bytes int, n_spaces int, mean_byte double, n_distinct_bytes int, "
+        "hist_0 int, hist_1 int, hist_2 int, hist_3 int",
+        [payload_col],
+        [c for c in df.columns if c != payload_col],
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = pdf[keep].copy()
-            names = (
-                "n_bytes", "n_spaces", "mean_byte", "n_distinct_bytes",
-                "hist_0", "hist_1", "hist_2", "hist_3",
-            )
-            feats = {k: [] for k in names}
-            for payload in pdf[payload_col]:
-                if payload is None:
-                    # NULL payload -> NULL features, the SQL semantics
-                    # (LENGTH(NULL) is NULL); the row itself survives
-                    for k in names:
-                        feats[k].append(None)
-                    continue
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                feats["n_bytes"].append(len(arr))
-                feats["n_spaces"].append(int((arr == 32).sum()))
-                feats["mean_byte"].append(float(arr.mean()) if len(arr) else 0.0)
-                feats["n_distinct_bytes"].append(int(len(np.unique(arr))))
-                hist, _ = np.histogram(arr, bins=4, range=(0, 256))
-                for i in range(4):
-                    feats[f"hist_{i}"].append(int(hist[i]))
-            for k, v in feats.items():
-                # pandas NULLABLE dtypes: a plain list with None would
-                # land as float64-with-NaN, and NaN->int Arrow casts are
-                # lossy/garbage (the q76 INT64_MIN class)
-                dtype = "Float64" if k == "mean_byte" else "Int32"
-                out[k] = pd.Series(v, index=pdf.index, dtype=dtype)
-            yield out
-
-    return df.mapInPandas(kernel, schema=schema)
 
 
 @query(
@@ -143,7 +159,7 @@ def extract_byte_features(df: DataFrame, payload_col: str = "payload") -> DataFr
     FROM documents
     """,
     doc="Multimodal plumbing, oracle-checkable slice: binary payload "
-        "attach -> mapInPandas byte features; n_bytes must equal the "
+        "attach -> mapInArrow byte features; n_bytes must equal the "
         "SQL OCTET_LENGTH of the utf-8 text (byte semantics, exact "
         "for unicode corpora), n_nonspace cross-checks the histogram "
         "path deterministically (the space byte 0x20 never occurs "
@@ -170,7 +186,8 @@ def frame_sample(df: DataFrame, payload_col: str = "payload",
     """Frame-sampling kernel (the video path of the multimodal surface):
     slice each payload into fixed-size frames and keep every
     ``stride``-th one — one input row fans out to ceil(n/(units*stride))
-    frame rows, all executor-side via mapInPandas. Frames are sliced in
+    frame rows, all executor-side via ``_row_map``; a NULL payload has
+    zero frames. Frames are sliced in
     DECODED units (characters of the utf-8 payload — a real codec
     slices decoded samples, never the compressed byte stream): slicing
     raw bytes would split multibyte characters across frame boundaries
@@ -178,24 +195,18 @@ def frame_sample(df: DataFrame, payload_col: str = "payload",
     SUBSTR, which counts characters. With a real video codec the
     slicing becomes keyframe extraction; the partitioning, fan-out and
     Arrow batch shape are identical."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "frame_str": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                if payload is None:
-                    continue  # NULL payload: zero frames (oracle: RANGE(NULL))
-                data = bytes(payload).decode("utf-8")
-                n_frames = (len(data) + frame_bytes - 1) // frame_bytes
-                for i in range(0, n_frames, stride):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(i)
-                    rows["frame_str"].append(
-                        data[i * frame_bytes : (i + 1) * frame_bytes]
-                    )
-            if rows["doc_id"]:
-                yield pd.DataFrame(rows)
 
-    return df.mapInPandas(kernel, schema="doc_id long, frame_idx int, frame_str string")
+    def frames(payload: bytes) -> list:
+        data = payload.decode("utf-8")
+        n_frames = (len(data) + frame_bytes - 1) // frame_bytes
+        return [
+            (i, data[i * frame_bytes : (i + 1) * frame_bytes])
+            for i in range(0, n_frames, stride)
+        ]
+
+    return _row_map(
+        df, frames, "frame_idx int, frame_str string", [payload_col], ["doc_id"], fan_out=True
+    )
 
 
 def resize_payload(df: DataFrame, payload_col: str = "payload",
@@ -206,39 +217,16 @@ def resize_payload(df: DataFrame, payload_col: str = "payload",
     payload — byte striding would split multibyte characters, round-9
     unicode fuzz axis, and diverge from the char-indexed SQL oracle).
     Deterministic stand-in for a real interpolating resize; 1:1 row
-    mapping, bounded output size."""
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = {"doc_id": [], "orig_len": [], "resized_len": [], "resized_str": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                if payload is None:
-                    # NULL payload -> NULL lengths/content, the SQL
-                    # semantics (LENGTH(NULL)/STRING_SPLIT(NULL) are
-                    # NULL); the row itself survives the 1:1 map
-                    out["orig_len"].append(None)
-                    out["resized_len"].append(None)
-                    out["resized_str"].append(None)
-                    continue
-                data = bytes(payload).decode("utf-8")
-                k = max(1, -(-len(data) // target_bytes))
-                resized = data[::k]
-                out["orig_len"].append(len(data))
-                out["resized_len"].append(len(resized))
-                out["resized_str"].append(resized)
-            yield pd.DataFrame(
-                {
-                    "doc_id": out["doc_id"],
-                    "orig_len": pd.array(out["orig_len"], dtype="Int32"),
-                    "resized_len": pd.array(out["resized_len"], dtype="Int32"),
-                    "resized_str": out["resized_str"],
-                }
-            )
+    mapping, bounded output size; a NULL payload gives NULL lengths
+    and content (the SQL rule) and the row survives."""
 
-    return df.mapInPandas(
-        kernel, schema="doc_id long, orig_len int, resized_len int, resized_str string"
+    def resize(payload: bytes) -> tuple:
+        data = payload.decode("utf-8")
+        resized = data[:: max(1, -(-len(data) // target_bytes))]
+        return len(data), len(resized), resized
+
+    return _row_map(
+        df, resize, "orig_len int, resized_len int, resized_str string", [payload_col], ["doc_id"]
     )
 
 
@@ -261,7 +249,7 @@ def resize_payload(df: DataFrame, payload_col: str = "payload",
     FROM frames
     WHERE frame_idx % {FRAME_STRIDE} = 0
     """,
-    doc="Frame sampling over binary payloads: mapInPandas slices each "
+    doc="Frame sampling over binary payloads: mapInArrow slices each "
         "payload into {}-char frames of the DECODED text and keeps "
         "every {}th (one row -> N frame rows, executor-side). Char "
         "slicing matches SQL SUBSTR exactly, so the oracle pins the "
@@ -292,7 +280,7 @@ def q81_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     doc="Resize/decimate kernel: every payload stride-sampled to at "
-        "most {} decoded chars (k = ceil(n/target)) in mapInPandas; "
+        "most {} decoded chars (k = ceil(n/target)) in mapInArrow; "
         "the oracle reproduces the exact char selection with an "
         "indexed list lambda, pinning content, not just lengths — "
         "exact for unicode corpora (round-9 fuzz axis)"
@@ -317,37 +305,26 @@ def audio_window_energy(
     decoded utf-8 payload — the decoded-unit sequence, exactly what
     SQL UNICODE() sees per character, so the oracle stays exact for
     unicode corpora (raw bytes diverged and split multibyte chars,
-    round-9 fuzz axis). mapInPandas fan-out — one payload row yields
-    ~len/hop window rows executor-side, payload bytes never visit the
-    driver; numpy does the per-batch vector math."""
+    round-9 fuzz axis). ``_row_map`` fan-out — one payload row yields
+    ~len/hop window rows executor-side (none for a NULL payload),
+    payload bytes never visit the driver; numpy does the per-window
+    vector math."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "win_idx": [], "start": [], "n_samples": [],
-                   "energy": [], "peak": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                if payload is None:
-                    continue  # NULL payload: zero windows (oracle: RANGE(NULL))
-                samples = np.array(
-                    [ord(c) for c in bytes(payload).decode("utf-8")],
-                    dtype=np.int64,
-                )
-                n = len(samples)
-                idx = 0
-                for start in range(0, n, hop):
-                    w = samples[start : start + win].astype(np.int64)
-                    out["doc_id"].append(int(doc_id))
-                    out["win_idx"].append(idx)
-                    out["start"].append(start)
-                    out["n_samples"].append(int(w.size))
-                    out["energy"].append(int((w * w).sum()))
-                    out["peak"].append(int(w.max()))
-                    idx += 1
-            yield pd.DataFrame(out)
+    def windows(payload: bytes) -> list:
+        samples = np.array([ord(c) for c in payload.decode("utf-8")], dtype=np.int64)
+        out = []
+        for idx, start in enumerate(range(0, len(samples), hop)):
+            w = samples[start : start + win]
+            out.append((idx, start, int(w.size), int((w * w).sum()), int(w.max())))
+        return out
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        kernel,
-        "doc_id long, win_idx int, start int, n_samples int, energy bigint, peak int",
+    return _row_map(
+        df,
+        windows,
+        "win_idx int, start int, n_samples int, energy bigint, peak int",
+        [payload_col],
+        ["doc_id"],
+        fan_out=True,
     )
 
 
@@ -377,7 +354,7 @@ def audio_window_energy(
         f"{AUDIO_WIN}-sample windows at hop {AUDIO_HOP} over each "
         "payload, per-window integer energy + peak — the windowed "
         "feature-extraction stage of an audio pipeline (a real FFT "
-        "kernel drops into the same mapInPandas slot; real WAV decode "
+        "kernel drops into the same mapInArrow slot; real WAV decode "
         "is q162). Samples are decoded CODEPOINTS, exactly SQL "
         "UNICODE() per char, so the fan-out geometry AND the numeric "
         "kernel are hash-graded for any corpus (BIGINT squares — "
@@ -501,35 +478,12 @@ def _scan_assets(reader, path: str, sub: str, ext: str, content: str = "content"
     )
 
 
-_IMAGE_STATS = ("img_h", "img_w", "px_sum", "px_max")
-
-
 def _image_stats(img: np.ndarray) -> tuple[int, int, int, int]:
-    """``_IMAGE_STATS`` of a decoded greyscale image; px_max is the
-    largest nonzero pixel, 0 for an all-zero image."""
+    """img_h, img_w, px_sum, px_max of a decoded greyscale image;
+    px_max is the largest nonzero pixel, 0 for an all-zero image."""
     px = img.reshape(-1).astype(np.int64)
     nz = px[px > 0]
     return int(img.shape[0]), int(img.shape[1]), int(px.sum()), int(nz.max()) if nz.size else 0
-
-
-def _image_stats_frame(bf: DataFrame, palette: bool) -> DataFrame:
-    """q161/q164's strict decode of (doc_id, content) assets into
-    doc_id + ``_IMAGE_STATS``; ``palette`` keeps channel 0 of a GIF's
-    identity-palette RGB."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import _image_stats, decode_image
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                img = decode_image(bytes(payload))
-                rows.append((int(doc_id), *_image_stats(img[..., 0] if palette else img)))
-            yield pd.DataFrame(rows, columns=["doc_id", *_IMAGE_STATS])
-
-    return bf.mapInPandas(
-        kernel, "doc_id long, img_h int, img_w int, px_sum bigint, px_max int"
-    )
 
 
 @query(
@@ -552,7 +506,7 @@ def _image_stats_frame(bf: DataFrame, palette: bool) -> DataFrame:
         "#3): executors PNG-encode each sampled doc's bytes as a real "
         f"greyscale image (width {IMG_WIDTH}, zlib IDAT, CRC chunks — "
         "sources/image.py), spark.read.format('binaryFile') scans the "
-        "file-per-asset directory, and a mapInPandas kernel decodes "
+        "file-per-asset directory, and a mapInArrow kernel decodes "
         "every payload with decode_image (magic sniff -> builtin PNG "
         "codec or Pillow) and emits header geometry + pixel stats. "
         "ASCII payloads make each statistic SQL-derivable from the "
@@ -567,7 +521,7 @@ def _image_stats_frame(bf: DataFrame, palette: bool) -> DataFrame:
 def q161_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = materialize_media_files(spark, sf_dir)
     bf = _scan_assets(spark.read.format("binaryFile"), path, "img", "png")
-    return _image_stats_frame(bf, palette=False)
+    return extract_image_features_safe(bf, on_error="raise").drop("decode_error")
 
 
 @query(
@@ -590,8 +544,9 @@ def q161_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="END-TO-END audio decode (closes the round-8 stub, VERDICT r8 "
         "#4): executors WAV-encode each sampled doc's bytes as int16 "
         f"PCM at {WAV_RATE} Hz (RIFF fmt/data chunks — sources/"
-        "audio.py), binaryFile scans the assets, and a mapInPandas "
-        "kernel decodes with decode_audio (builtin RIFF walker or "
+        "audio.py), binaryFile scans the assets, and a mapInArrow "
+        "kernel (extract_audio_features_safe, on_error=raise) decodes "
+        "with decode_audio (builtin RIFF walker or "
         "soundfile) emitting the HEADER sample rate plus sample "
         "stats. sample_rate pins the fmt-chunk parse; n_samples/"
         "energy/peak pin the PCM payload sample-exactly against the "
@@ -602,26 +557,7 @@ def q161_image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q162_audio_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = materialize_media_files(spark, sf_dir)
     bf = _scan_assets(spark.read.format("binaryFile"), path, "wav", "wav")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_audio
-
-        for pdf in batches:
-            out = {"doc_id": [], "sample_rate": [], "n_samples": [],
-                   "energy": [], "peak": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["content"]):
-                samples, rate = decode_audio(bytes(payload))
-                s = samples.astype(np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(s.size))
-                out["energy"].append(int((s * s).sum()))
-                out["peak"].append(int(s.max()) if s.size else 0)
-            yield pd.DataFrame(out)
-
-    return bf.mapInPandas(
-        kernel, "doc_id long, sample_rate int, n_samples int, energy bigint, peak int"
-    )
+    return extract_audio_features_safe(bf, on_error="raise").drop("decode_error")
 
 
 JPEG_MAX_ERR = 3  # |decoded - source| bound at quality 100 (DCT rounding)
@@ -645,7 +581,7 @@ JPEG_MAX_ERR = 3  # |decoded - source| bound at quality 100 (DCT rounding)
         "doc's pixel grid as a REAL baseline JPEG at quality 100 "
         "(sources/jpeg.py — Annex K tables, Huffman entropy coding, "
         "DCT), two binaryFile scans load the .jpg and the lossless "
-        ".png twin, an equi-join pairs them per doc_id, and a mapInPandas "
+        ".png twin, an equi-join pairs them per doc_id, and a mapInArrow "
         "kernel decodes BOTH containers and emits the JPEG's header "
         "geometry plus jpeg_close = (max |jpeg - png| <= "
         f"{JPEG_MAX_ERR}). Geometry is SQL-exact from the source "
@@ -666,29 +602,21 @@ def q163_jpeg_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_image
+    def fidelity(jpg: bytes, png: bytes) -> tuple:
+        img, truth = decode_image(jpg), decode_image(png)
+        err = (
+            np.max(np.abs(img.astype(np.int64) - truth.astype(np.int64)))
+            if img.shape == truth.shape
+            else 256
+        )
+        return int(img.shape[0]), int(img.shape[1]), bool(err <= JPEG_MAX_ERR)
 
-        for pdf in batches:
-            out = {"doc_id": [], "img_h": [], "img_w": [], "jpeg_close": []}
-            for doc_id, jpg, png in zip(
-                pdf["doc_id"], pdf["jpg_bytes"], pdf["png_bytes"]
-            ):
-                img = decode_image(bytes(jpg))
-                truth = decode_image(bytes(png))
-                err = (
-                    np.max(np.abs(img.astype(np.int64) - truth.astype(np.int64)))
-                    if img.shape == truth.shape
-                    else 256
-                )
-                out["doc_id"].append(int(doc_id))
-                out["img_h"].append(int(img.shape[0]))
-                out["img_w"].append(int(img.shape[1]))
-                out["jpeg_close"].append(bool(err <= JPEG_MAX_ERR))
-            yield pd.DataFrame(out)
-
-    return paired.mapInPandas(
-        kernel, "doc_id long, img_h int, img_w int, jpeg_close boolean"
+    return _row_map(
+        paired,
+        fidelity,
+        "img_h int, img_w int, jpeg_close boolean",
+        ["jpg_bytes", "png_bytes"],
+        ["doc_id"],
     )
 
 
@@ -712,7 +640,9 @@ def q163_jpeg_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "encode each sampled doc's pixel grid as a REAL GIF89a "
         "(identity 256-gray palette, LSB-first LZW with table resets "
         "— sources/image.py encode_gif), binaryFile scans the assets, "
-        "and the kernel decodes through decode_image's GIF branch "
+        "and the mapInArrow kernel (extract_image_features_safe, "
+        "on_error=raise, channel 0 of the palette decode) decodes "
+        "through decode_image's GIF branch "
         "(sub-block reassembly, LZW, palette resolve). GIF is "
         "LOSSLESS, so like q161 the header geometry AND the pixel "
         "statistics hash-match the SQL oracle on the source text "
@@ -724,7 +654,7 @@ def q163_jpeg_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q164_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = materialize_media_files(spark, sf_dir)
     bf = _scan_assets(spark.read.format("binaryFile"), path, "gif", "gif")
-    return _image_stats_frame(bf, palette=True)
+    return extract_image_features_safe(bf, on_error="raise", palette=True).drop("decode_error")
 
 
 @query(
@@ -747,8 +677,8 @@ def q164_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "write a REAL Motion-JPEG AVI (RIFF hdrl/movi/idx1 container "
         "+ quality-100 T.81 frames — sources/video.py), binaryFile "
         "scans pair each .avi with its lossless .png twin (an "
-        "equi-join), and the kernel decodes the CONTAINER (RIFF walk, "
-        "LIST rec descent, per-frame Huffman+DCT) and emits frame "
+        "equi-join), and a mapInArrow kernel decodes the CONTAINER "
+        "(RIFF walk, LIST rec descent, per-frame Huffman+DCT) and emits frame "
         "geometry (SQL-exact from the text length) plus frames_close "
         f"= (max |frames - grid| <= {JPEG_MAX_ERR}, TRUE in the "
         "oracle). With q161/q163/q164 this drive-grades all four "
@@ -758,6 +688,8 @@ def q164_gif_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Runs strict (on_error=raise): these assets are engine-written, so a decode failure is an engine bug to surface, not foreign corruption to quarantine (q166/q167 cover that posture).",
 )
 def q165_video_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from sklearn_raster_spark.sources.video import decode_mjpeg_avi
+
     path = materialize_media_files(spark, sf_dir)
     paired = _scan_assets(
         spark.read.format("binaryFile"), path, "avi", "avi", "avi_bytes"
@@ -766,39 +698,53 @@ def q165_video_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_image
-        from sklearn_raster_spark.sources.video import decode_mjpeg_avi
+    def fidelity(avi: bytes, png: bytes) -> tuple:
+        frames = decode_mjpeg_avi(avi)
+        truth = decode_image(png)
+        n, fh, fw = frames.shape[:3]
+        padded = np.zeros((n * fh, fw), np.uint8)
+        ok = truth.shape[1] == fw and truth.shape[0] <= n * fh
+        if ok:
+            padded[: truth.shape[0]] = truth
+            err = int(
+                np.max(np.abs(frames.reshape(n * fh, fw).astype(np.int64)
+                              - padded.astype(np.int64)))
+            )
+            ok = err <= JPEG_MAX_ERR
+        return int(n), int(fh), int(fw), bool(ok)
 
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "frame_h": [], "frame_w": [],
-                   "frames_close": []}
-            for doc_id, avi, png in zip(
-                pdf["doc_id"], pdf["avi_bytes"], pdf["png_bytes"]
-            ):
-                frames = decode_mjpeg_avi(bytes(avi))
-                truth = decode_image(bytes(png))
-                n, fh, fw = frames.shape[:3]
-                padded = np.zeros((n * fh, fw), np.uint8)
-                ok = truth.shape[1] == fw and truth.shape[0] <= n * fh
-                if ok:
-                    padded[: truth.shape[0]] = truth
-                    err = int(
-                        np.max(np.abs(frames.reshape(n * fh, fw).astype(np.int64)
-                                      - padded.astype(np.int64)))
-                    )
-                    ok = err <= JPEG_MAX_ERR
-                out["doc_id"].append(int(doc_id))
-                out["n_frames"].append(int(n))
-                out["frame_h"].append(int(fh))
-                out["frame_w"].append(int(fw))
-                out["frames_close"].append(bool(ok))
-            yield pd.DataFrame(out)
-
-    return paired.mapInPandas(
-        kernel,
-        "doc_id long, n_frames int, frame_h int, frame_w int, frames_close boolean",
+    return _row_map(
+        paired,
+        fidelity,
+        "n_frames int, frame_h int, frame_w int, frames_close boolean",
+        ["avi_bytes", "png_bytes"],
+        ["doc_id"],
     )
+
+
+def _quarantine_decode(
+    df: DataFrame, stats: Callable, outputs: str, content_col: str, id_col: str, on_error: str
+) -> DataFrame:
+    """The one body of the quarantine kernels: ``stats(payload)`` per
+    row through ``_row_map``, plus a ``decode_error`` column. A payload
+    whose decode raises the codec-contract ValueError /
+    NotImplementedError (sources/_contract.py) yields NULL ``outputs``
+    and the error text under ``on_error="quarantine"``, and re-raises
+    under ``on_error="raise"``. A NULL payload is not a decode: NULL
+    features, NULL error."""
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
+    failed = (None,) * len(DataType.fromDDL(outputs).fields)
+
+    def decode(payload: bytes) -> tuple:
+        try:
+            return (*stats(payload), None)
+        except (ValueError, NotImplementedError) as exc:
+            if on_error == "raise":
+                raise
+            return (*failed, f"{type(exc).__name__}: {exc}")
+
+    return _row_map(df, decode, outputs + ", decode_error string", [content_col], [id_col])
 
 
 def extract_image_features_safe(
@@ -806,6 +752,7 @@ def extract_image_features_safe(
     content_col: str = "content",
     id_col: str = "doc_id",
     on_error: str = "quarantine",
+    palette: bool = False,
 ) -> DataFrame:
     """Image decode + feature extraction with the QUARANTINE contract
     (round 10, VERDICT r9 missing #1): the reference's NoData
@@ -817,48 +764,18 @@ def extract_image_features_safe(
     ``decode_error`` column — the ROW SURVIVES, so at 100 TB one
     truncated asset in a billion quarantines itself instead of
     failing the task, the stage, then the job. ``on_error="raise"``
-    is strict mode (q161's semantics: engine-written assets, any
-    decode failure is a codec bug and must surface)."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
-    schema = (
-        f"{id_col} long, img_h int, img_w int, px_sum bigint, px_max int, "
-        "decode_error string"
+    is strict mode (q161/q164: engine-written assets, any decode
+    failure is a codec bug and must surface). ``palette`` keeps
+    channel 0 of the decode: q164's GIFs resolve their identity gray
+    palette to three equal RGB channels."""
+
+    def stats(payload: bytes) -> tuple:
+        img = decode_image(payload)
+        return _image_stats(img[..., 0] if palette else img)
+
+    return _quarantine_decode(
+        df, stats, "img_h int, img_w int, px_sum bigint, px_max int", content_col, id_col, on_error
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import _image_stats, decode_image
-
-        for pdf in batches:
-            out = {k: [] for k in (id_col, *_IMAGE_STATS, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                out[id_col].append(int(doc_id))
-                try:
-                    stats = _image_stats(decode_image(bytes(payload)))
-                    error = None
-                except (ValueError, NotImplementedError) as exc:
-                    if on_error == "raise":
-                        raise
-                    stats = (None,) * len(_IMAGE_STATS)
-                    error = f"{type(exc).__name__}: {exc}"
-                for k, v in zip(_IMAGE_STATS, stats):
-                    out[k].append(v)
-                out["decode_error"].append(error)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    # nullable dtypes: plain lists with None land as
-                    # float64-with-NaN and NaN->int Arrow casts are
-                    # lossy (the q76 INT64_MIN class)
-                    "img_h": pd.array(out["img_h"], dtype="Int32"),
-                    "img_w": pd.array(out["img_w"], dtype="Int32"),
-                    "px_sum": pd.array(out["px_sum"], dtype="Int64"),
-                    "px_max": pd.array(out["px_max"], dtype="Int32"),
-                    "decode_error": pd.array(out["decode_error"], dtype="object"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema)
 
 
 @query(
@@ -900,7 +817,7 @@ def extract_image_features_safe(
         "codecs, truncate/bit-flip/splice/append/smash, decode is "
         "total over arbitrary bytes). Scale: identical "
         "file-per-asset shape to q161; the quarantine path adds no "
-        "shuffle — the error column rides the same mapInPandas.",
+        "shuffle — the error column rides the same mapInArrow.",
 )
 def q166_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = materialize_media_files(spark, sf_dir)
@@ -929,49 +846,22 @@ def extract_audio_features_safe(
     """Audio twin of ``extract_image_features_safe`` — the quarantine
     contract over decode_audio (WAV/FLAC builtin codecs, soundfile
     when present): decode error -> NULL features + ``decode_error``,
-    row survives; ``on_error="raise"`` is q162's strict mode."""
-    if on_error not in ("raise", "quarantine"):
-        raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
-    schema = (
-        f"{id_col} long, sample_rate int, n_samples int, energy bigint, "
-        "peak int, decode_error string"
+    row survives; ``on_error="raise"`` is q162's strict mode. Both run
+    ``_quarantine_decode``."""
+
+    def stats(payload: bytes) -> tuple:
+        samples, rate = decode_audio(payload)
+        s = np.asarray(samples).astype(np.int64).reshape(-1)
+        return int(rate), int(s.size), int((s * s).sum()), int(s.max()) if s.size else 0
+
+    return _quarantine_decode(
+        df,
+        stats,
+        "sample_rate int, n_samples int, energy bigint, peak int",
+        content_col,
+        id_col,
+        on_error,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sklearn_raster_spark.operators.multimodal import decode_audio
-
-        for pdf in batches:
-            out = {id_col: [], "sample_rate": [], "n_samples": [],
-                   "energy": [], "peak": [], "decode_error": []}
-            for doc_id, payload in zip(pdf[id_col], pdf[content_col]):
-                out[id_col].append(int(doc_id))
-                try:
-                    samples, rate = decode_audio(bytes(payload))
-                except (ValueError, NotImplementedError) as exc:
-                    if on_error == "raise":
-                        raise
-                    for k in ("sample_rate", "n_samples", "energy", "peak"):
-                        out[k].append(None)
-                    out["decode_error"].append(f"{type(exc).__name__}: {exc}")
-                    continue
-                s = np.asarray(samples).astype(np.int64).reshape(-1)
-                out["sample_rate"].append(int(rate))
-                out["n_samples"].append(int(s.size))
-                out["energy"].append(int((s * s).sum()))
-                out["peak"].append(int(s.max()) if s.size else 0)
-                out["decode_error"].append(None)
-            yield pd.DataFrame(
-                {
-                    id_col: out[id_col],
-                    "sample_rate": pd.array(out["sample_rate"], dtype="Int32"),
-                    "n_samples": pd.array(out["n_samples"], dtype="Int32"),
-                    "energy": pd.array(out["energy"], dtype="Int64"),
-                    "peak": pd.array(out["peak"], dtype="Int32"),
-                    "decode_error": pd.array(out["decode_error"], dtype="object"),
-                }
-            )
-
-    return df.mapInPandas(kernel, schema)
 
 
 @query(
@@ -997,7 +887,7 @@ def extract_audio_features_safe(
         "corrupt-asset directory (the crawl-ingestion shape — new "
         "objects land continuously, a fraction are damaged), the SAME "
         "quarantine kernel as q166 decodes each micro-batch "
-        "(mapInPandas composes with Structured Streaming untouched), "
+        "(mapInArrow composes with Structured Streaming untouched), "
         "and a complete-mode aggregation tallies assets + pixel sums "
         "per error class. The oracle predicts both groups exactly, so "
         "the hash grade proves the quarantine contract holds under "
@@ -1009,14 +899,7 @@ def extract_audio_features_safe(
         "one row per error class — O(1).",
 )
 def q167_stream_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from pyspark.sql.types import BinaryType, LongType, StringType, TimestampType
 
     from sklearn_raster_spark.streaming import run_stream_to_memory
 

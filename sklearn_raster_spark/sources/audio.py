@@ -20,7 +20,7 @@ soundfile when the environment provides it. Scope:
   decorrelation (left/side, side/right, mid/side), wasted bits,
   8-32-bit depths, fixed and variable blocking.
 
-Decode runs on EXECUTORS inside mapInPandas kernels — payload bytes
+Decode runs on EXECUTORS inside mapInArrow kernels — payload bytes
 never visit the driver.
 """
 

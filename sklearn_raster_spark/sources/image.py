@@ -27,7 +27,7 @@ environment provides it:
 
 ``decode_image`` sniffs the magic bytes, so the multimodal kernels
 never need a trusted mime column. Decode runs on EXECUTORS inside
-mapInPandas — each call allocates only the one array it returns.
+mapInArrow — each call allocates only the one array it returns.
 """
 
 from __future__ import annotations

@@ -26,7 +26,7 @@ public specs:
 Chroma upsampling is box replication (nearest), so pixels decoded
 from subsampled files differ from libjpeg's smooth upsampler by a few
 codes — tests compare via PSNR, never bit-exactness. Decode runs on
-EXECUTORS inside mapInPandas; each call touches only its one payload.
+EXECUTORS inside mapInArrow; each call touches only its one payload.
 """
 
 from __future__ import annotations

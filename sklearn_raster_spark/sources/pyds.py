@@ -54,7 +54,9 @@ module exercises every piece of the API that matters at 100 TB:
   skips the corrupt line (or the rest of an undecodable shard) and
   keeps every decodable row — one rotten shard in a 100 TB crawl
   quarantines itself instead of failing the job (the byte-level
-  analog of ``extract_image_features_safe``, multimodal.py). Lines
+  analog of multimodal.py's quarantine kernels,
+  ``extract_image_features_safe`` / ``extract_audio_features_safe``,
+  whose ``mapInArrow`` row-map keeps each bad payload's row). Lines
   are read through a 16 MiB plausibility bound so a gzip bomb cannot
   allocate unbounded memory for a single "line". Type validation is
   RANGE-aware: a JSON integer outside the target column's int width

@@ -17,7 +17,7 @@ from the public specs, no cv2/ffmpeg required.
   their own tables override them, frames that omit them (the common
   hardware-MJPEG shape) still decode.
 
-Decode runs on EXECUTORS inside mapInPandas — one payload per call.
+Decode runs on EXECUTORS inside mapInArrow — one payload per call.
 """
 
 from __future__ import annotations

@@ -100,14 +100,6 @@ def _list_to_matrix(arr: pa.Array):
     return (mat, row_valid, d), None
 
 
-def _seq_fold_rows(prod: np.ndarray) -> np.ndarray:
-    """Left-to-right float64 fold per row with init 0.0 — bit-identical
-    to F.aggregate(..., lit(0.0), acc + x) and DuckDB LIST_REDUCE."""
-    n = prod.shape[0]
-    with_init = np.concatenate([np.zeros((n, 1)), prod], axis=1)
-    return np.cumsum(with_init, axis=1)[:, -1]
-
-
 def _fold_pair_slow(a_row, b_row, op) -> float | None:
     """Exact per-row fallback replicating zip_with null-padding and
     element-null poisoning. a_row/b_row are python lists or None."""
@@ -565,7 +557,8 @@ def knn_topk_map(cand_sets, fit_X, k: int):
                     np.take(fX, cid[s:e], axis=0, out=b)
                     np.subtract(a, b, out=a)
                     np.multiply(a, a, out=a)
-                    # in-place cumsum == _seq_fold_rows here: the fold's
+                    # in-place cumsum is the left-to-right float64 fold
+                    # with init 0.0 (F.aggregate / LIST_REDUCE): the
                     # leading 0.0 only matters when the FIRST term is
                     # -0.0, and a square is never -0.0
                     np.cumsum(a, axis=1, out=a)

@@ -37,6 +37,41 @@ def _assets():
     ]
 
 
+def _wav_assets():
+    from sklearn_raster_spark.sources.audio import encode_wav
+
+    good = encode_wav(np.array([3, -4, 5, 0, -2], np.int16), 8000)
+    return [
+        (1, bytearray(good)),
+        (2, bytearray(good[: len(good) // 2])),     # truncated: fmt/data lost
+        (3, bytearray(b"\x00" * 12 + good[12:])),   # magic smashed
+    ]
+
+
+def _assert_null_payload_and_all_corrupt_batch(spark, kernel, assets, features):
+    """A NULL payload and a batch where every decode fails both come
+    back as NULL in every int/bigint feature (not 0, not INT64_MIN),
+    with the schema of a valid batch. A NULL payload is no decode, so
+    its decode_error is NULL too; corrupt rows carry their error."""
+    from pyspark.sql.types import DataType
+
+    expected = DataType.fromDDL(f"doc_id bigint, {features}, decode_error string")
+    assert kernel(_payload_df(spark, assets[:1]), on_error="quarantine").schema == expected
+    corrupt = [a for a in assets if a[0] in (2, 3)]
+    for rows in ([(9, None)], corrupt, corrupt + [(9, None)]):
+        out = kernel(_payload_df(spark, rows).coalesce(1), on_error="quarantine")
+        assert out.schema == expected
+        got = {r["doc_id"]: r for r in out.collect()}
+        assert sorted(got) == sorted(doc_id for doc_id, _ in rows)
+        for doc_id, payload in rows:
+            r = got[doc_id]
+            assert all(r[f.name] is None for f in expected.fields[1:-1]), r
+            if payload is None:
+                assert r["decode_error"] is None
+            else:
+                assert r["decode_error"].startswith(("ValueError", "NotImplementedError"))
+
+
 def test_quarantine_mode_isolates_errors(spark):
     out = {
         r["doc_id"]: r
@@ -66,15 +101,26 @@ def test_quarantine_mode_isolates_errors(spark):
     }
     for ok_id in (1, 4):
         assert tuple(out[ok_id]) == tuple(clean[ok_id])
+    _assert_null_payload_and_all_corrupt_batch(
+        spark, extract_image_features_safe, _assets(),
+        "img_h int, img_w int, px_sum bigint, px_max int",
+    )
 
 
 def test_strict_mode_raises(spark):
-    with pytest.raises(Exception, match="ValueError|malformed|truncated|PNG"):
-        extract_image_features_safe(
-            _payload_df(spark, _assets()), on_error="raise"
-        ).collect()
-    with pytest.raises(ValueError, match="on_error"):
-        extract_image_features_safe(_payload_df(spark, _assets()), on_error="x")
+    from sklearn_raster_spark.operators.multimodal import extract_audio_features_safe
+
+    for kernel, assets in (
+        (extract_image_features_safe, _assets()),
+        (extract_audio_features_safe, _wav_assets()),
+    ):
+        with pytest.raises(Exception, match="ValueError|malformed|truncated|PNG|WAV"):
+            kernel(_payload_df(spark, assets), on_error="raise").collect()
+        with pytest.raises(ValueError, match="on_error"):
+            kernel(_payload_df(spark, assets), on_error="x")
+        # a NULL payload is no decode failure: NULL features, no raise
+        strict = kernel(_payload_df(spark, [(9, None)]), on_error="raise").collect()
+        assert [tuple(r) for r in strict] == [(9, None, None, None, None, None)]
 
 
 def test_q166_corruption_rule_is_deterministic():
@@ -103,19 +149,12 @@ def test_q166_corruption_rule_is_deterministic():
 
 def test_audio_quarantine_twin(spark):
     from sklearn_raster_spark.operators.multimodal import extract_audio_features_safe
-    from sklearn_raster_spark.sources.audio import encode_wav
 
     pcm = np.array([3, -4, 5, 0, -2], np.int16)
-    good = encode_wav(pcm, 8000)
-    rows = [
-        (1, bytearray(good)),
-        (2, bytearray(good[: len(good) // 2])),     # truncated: fmt/data lost
-        (3, bytearray(b"\x00" * 12 + good[12:])),   # magic smashed
-    ]
     out = {
         r["doc_id"]: r
         for r in extract_audio_features_safe(
-            _payload_df(spark, rows), on_error="quarantine"
+            _payload_df(spark, _wav_assets()), on_error="quarantine"
         ).collect()
     }
     ok = out[1]
@@ -126,3 +165,7 @@ def test_audio_quarantine_twin(spark):
         r = out[bad_id]
         assert r["decode_error"] is not None
         assert r["energy"] is None and r["sample_rate"] is None
+    _assert_null_payload_and_all_corrupt_batch(
+        spark, extract_audio_features_safe, _wav_assets(),
+        "sample_rate int, n_samples int, energy bigint, peak int",
+    )
